@@ -21,26 +21,31 @@ Scale design (the 10^12-doc story):
 * **Term buckets give query-side pruning.**  Segments are written
   partitioned by ``bucket = xxhash64(term) % n_buckets``; a query reads
   only its terms' buckets (directory-level partition pruning).
-* **Single tokenize pass.**  Tokenization (the expensive pandas-UDF
-  stage) runs once; the aggregated postings are staged to parquet, and
-  doc lengths, corpus stats, segments, term stats and lineage all derive
-  from the staged postings — no recomputation of lineage per action.
-  The staging directory doubles as the build checkpoint.
+* **Single tokenize pass.**  Tokenization (the expensive Python
+  stage) runs once, inside ``_make_fragment_gen``: each doc-id-sorted
+  Arrow batch becomes finished compressed fragment blocks plus one
+  reserved ``#doclens#`` row.  Doc lengths and corpus stats come from
+  those sentinel rows; segments come from re-chunking the compressed
+  blocks (``_compact_segments``); term stats and lineage come from the
+  segment metadata.  Every builder encodes through
+  ``_encode_sorted_runs``.
 * **Block-max metadata.**  Each 128-posting block stores
   ``(max_tf, min_dl)``; the query computes the WAND upper bound
   ``idf · tfnorm(max_tf, min_dl, avgdl)`` with broadcast stats, so the
   build needs no stats pre-pass.
 
-Two build paths share this file (both serve the identical query
-engine, equality-tested):
+Three builders share this one fragment pass (all serve the identical
+query engine, equality-tested):
 
-* ``build_index`` — the north-star shape: doc-postings UDF → staged
-  parquet (checkpoint) → salted repartition-by-term-bucket shuffle
-  keyed on (bucket, chunk) → per-group sorted encode.  Term-clustered
-  segment layout; resumable variant ``build_index_resumable``.
-* ``build_index_fast`` — zero-shuffle MapReduce-indexer shape: each
-  Arrow batch emits finished compressed block rows (plus per-batch
-  doclen rows); measured 0.94 scaling efficiency 2→8 cores at 1M docs.
+* ``build_index`` — range-partition the docs by doc_id → fragment pass
+  → block-level re-chunk into the term-clustered (bucket, chunk)
+  layout.
+* ``build_index_resumable`` — the same pass per doc-id-range part; each
+  part's fragments are committed under ``_parts/part=<j>`` with a
+  marker, and the finished store is row-equal to ``build_index``'s.
+* ``build_index_fast`` — the fragment pass alone, zero-shuffle
+  MapReduce-indexer shape; measured 0.94 scaling efficiency 2→8 cores
+  at 1M docs.
 """
 
 from __future__ import annotations
@@ -55,14 +60,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sqltok
-from ..functions.udfs import (
-    doc_postings_from_html_udf,
-    doc_postings_stem_udf,
-    doc_postings_udf,
-    extract_and_tokenize_udf,
-    tokenize_stem_udf,
-    tokenize_udf,
-)
 from . import codec
 from ..sources import fsio
 
@@ -153,83 +150,13 @@ def ensure_parallelism(df: DataFrame, min_factor: int = 2) -> DataFrame:
 class IndexPaths:
     def __init__(self, root: str):
         self.root = root
-        self.postings = os.path.join(root, "postings")  # staged, also checkpoint
         self.segments = os.path.join(root, "segments")
         self.term_stats = os.path.join(root, "term_stats")
         self.doclens = os.path.join(root, "doclens")
         self.stats = os.path.join(root, "stats.json")
         self.lineage = os.path.join(root, "lineage")
         self.commits = os.path.join(root, "_commits")
-
-
-def tokenize_docs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stem: bool = False,
-    from_html: bool = False,
-) -> DataFrame:
-    """(doc_id, tokens, dl). Tokens per ``jobs/Indexer.java:129-140``;
-    optional Porter stemming (north-star analyzer).  With
-    ``from_html=True`` the column is raw HTML and the full
-    returnCleanedupPage pipeline (extraction + tokenize,
-    ``Indexer.java:83-141``) runs in one vectorized UDF — the true
-    webtext workload."""
-    if from_html:
-        udf = extract_and_tokenize_udf
-    else:
-        udf = tokenize_stem_udf if stem else tokenize_udf
-    return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        udf(F.col(text_col)).alias("tokens"),
-    ).withColumn("dl", F.size("tokens"))
-
-
-def doc_postings(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stem: bool = False,
-    from_html: bool = False,
-    n_buckets: int = DEFAULT_BUCKETS,
-    chunk_bits: int = CHUNK_BITS,
-) -> DataFrame:
-    """(term, doc_id, tf, positions, dl, bucket, chunk) in ONE vectorized
-    pass: tf and 1-based positions are per-document facts, so the UDF
-    emits finished posting fragments and the only JVM work is an explode
-    — no distributed groupBy(term, doc) ever happens.  (The first
-    implementation aggregated exploded tokens with collect_list; the
-    millions of per-group buffers thrashed GC and anti-scaled with
-    cores.)  Positions convention per ``AnchorTextIndexer.java:57-66``;
-    postings carry tf+positions per the north_star."""
-    if from_html:
-        udf = doc_postings_from_html_udf
-    else:
-        udf = doc_postings_stem_udf if stem else doc_postings_udf
-    # explode_outer keeps token-less documents as a null-term row, so
-    # doclens / n_docs / avgdl still count them (the DuckDB oracle and
-    # the reference's corpus stats do); the segment builder filters the
-    # null rows out.
-    frag = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        udf(F.col(text_col)).alias("dp"),
-    ).select(
-        "doc_id", F.col("dp.dl").alias("dl"), F.explode_outer("dp.postings").alias("p")
-    )
-    # bucket = term_hash63 % n_buckets — the hash comes from the UDF
-    # (functions/hashing.py), so query-side pruning predicates are
-    # computable in plain Python with no JVM hash round-trip
-    return frag.select(
-        F.col("p.term").alias("term"),
-        "doc_id",
-        F.col("p.tf").alias("tf"),
-        F.col("p.positions").alias("positions"),
-        "dl",
-        F.coalesce(
-            F.pmod(F.col("p.th"), F.lit(n_buckets)).cast("int"), F.lit(0)
-        ).alias("bucket"),
-        F.floor(F.col("doc_id") / F.lit(1 << chunk_bits)).cast("long").alias("chunk"),
-    )
+        self.parts = os.path.join(root, "_parts")  # resumable fragment sets
 
 
 def _encode_blocks(
@@ -265,21 +192,15 @@ def _encode_blocks(
 
 def _encode_bucket_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
     """REFERENCE encoder (readable, per-run loop) — kept as the
-    byte-identity oracle for the production `_encode_bucket_chunk_vec`
+    byte-identity oracle for the production :func:`_encode_sorted_runs`
     (test_vectorized_encoder_matches_loopy_reference).
 
-    One (bucket, chunk) shuffle group → block rows for EVERY term run
-    inside it.  History of the two r6 steps this shape encodes: (a)
-    grouping used to be one applyInPandas group per (bucket, term,
-    chunk) — with a realistic vocabulary that is hundreds of thousands
-    of tiny groups and the ~0.3 ms per-group Arrow/pandas overhead
-    dominated (10k-vocab corpus: 80 s vs 8 s small-vocab); grouping by
-    (bucket, chunk) caps the group COUNT at n_buckets × chunks while
-    term-hash bucketing bounds group SIZE at ~chunk_tokens/n_buckets.
-    (b) The per-run codec calls inside the group were then the next
-    floor (~1.6 ms per tiny run × |vocab|×chunks runs) — the _vec twin
-    removes them with the segmented codec (same-session A/B on the
-    10k-vocab corpus: 14.9 → 10.6 s end-to-end)."""
+    One (bucket, chunk) group of posting rows → block rows for EVERY
+    term run inside it, sorted by (term, doc_id).  The per-run codec
+    calls cost ~1.6 ms per tiny run × |vocab|×chunks runs, which is why
+    production encodes a whole group in one segmented-codec pass
+    instead (same-session A/B on the 10k-vocab corpus: 14.9 → 10.6 s
+    end-to-end)."""
     rows: list = []
     if not len(pdf):
         return pd.DataFrame(rows, columns=SEGMENT_COLS)
@@ -300,38 +221,6 @@ def _encode_bucket_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
             docs_all[s:e], tfs_all[s:e], dls_all[s:e], pos_all[s:e], rows,
         )
     return pd.DataFrame(rows, columns=SEGMENT_COLS)
-
-
-def _encode_bucket_chunk_vec(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Fully vectorized twin of :func:`_encode_bucket_chunk` — the
-    production encoder (byte-identical output, equality pytest-gated
-    on randomized corpora).
-
-    The loopy path costs ~1.6 ms per TINY (term, chunk) run (four
-    fixed-overhead codec calls + a pure-Python position flatten), and
-    a realistic vocabulary means hundreds of thousands of such runs —
-    ~85 % of the whole 10k-vocab build was encoder overhead.  Here the
-    whole (bucket, chunk) group is encoded in ONE pass per stream:
-    block boundaries are computed vectorized (every run start is a
-    block start, so per-block delta resets land exactly where the
-    per-run path puts them), the segmented codec
-    (:func:`codec.vb_encode_segmented`) emits one buffer + per-block
-    byte offsets, and per-block rows are cheap buffer slices.  The
-    only remaining per-element Python work is ``len()`` over the
-    position lists."""
-    if not len(pdf):
-        return pd.DataFrame([], columns=SEGMENT_COLS)
-    pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-    n = len(pdf)
-    return _encode_sorted_runs(
-        pdf["term"].to_numpy(),
-        np.full(n, int(pdf["bucket"].iloc[0]), dtype=np.int64),
-        np.full(n, int(pdf["chunk"].iloc[0]), dtype=np.int64),
-        pdf["doc_id"].to_numpy(dtype=np.int64),
-        pdf["tf"].to_numpy(dtype=np.int64),
-        pdf["dl"].to_numpy(dtype=np.int64),
-        pdf["positions"].tolist(),
-    )
 
 
 def _encode_sorted_runs(
@@ -418,38 +307,6 @@ def _encode_sorted_runs(
     )
 
 
-def build_segments(postings: DataFrame, n_sub: int = 1) -> DataFrame:
-    """Salted repartition-by-term-bucket → sorted, compressed block
-    rows.
-
-    The shuffle key is (bucket, chunk): bucket = term-hash (locality —
-    all of a term's postings for a doc range land together), chunk
-    (doc range) as the skew salt.  A single hot term is bounded at
-    2^chunk_bits postings per group exactly as before — the salt is
-    unchanged — while the group COUNT stays at n_buckets × chunks
-    instead of |vocab| × chunks.  applyInPandas sorts each bounded
-    group by (term, doc_id) and emits ≤ ceil(run/128) block rows per
-    term run (vectorized encoder; the loopy twin remains as the
-    equality-test reference).
-
-    ``n_sub`` (ADVICE r06, see :func:`group_subsplits`): when the
-    expected per-group posting mass exceeds ``MAX_GROUP_POSTINGS``, the
-    group is further salted on a term-hash sub-key (murmur3 ``F.hash``
-    — independent of the blake2b bucket hash, so terms inside one
-    bucket spread across sub-keys).  A term's run for a chunk still
-    lands entirely in one group, so the emitted block rows — and the
-    stored bytes — are identical for any ``n_sub`` (equality
-    pytest-gated); only the shuffle-group size changes."""
-    filtered = postings.filter(F.col("term").isNotNull())  # token-less-doc sentinels
-    if n_sub > 1:
-        grouped = filtered.withColumn(
-            "_sub", F.pmod(F.hash("term"), F.lit(n_sub))
-        ).groupBy("bucket", "chunk", "_sub")
-    else:
-        grouped = filtered.groupBy("bucket", "chunk")
-    return grouped.applyInPandas(_encode_bucket_chunk_vec, SEGMENT_SCHEMA)
-
-
 def _run_concurrently(*fns) -> None:
     """Submit independent Spark jobs from concurrent driver threads and
     wait for all; first exception (if any) re-raises.  Used to collapse
@@ -483,7 +340,7 @@ def _run_concurrently(*fns) -> None:
 
 def _decode_doclen_rows(batches):
     """mapInPandas generator: reserved #doclens# sentinel block rows →
-    (doc_id, dl) rows (shared by the fast and term-partitioned builds)."""
+    (doc_id, dl) rows (shared by every builder)."""
     for pdf in batches:
         outs = []
         for r in pdf.itertuples():
@@ -494,10 +351,20 @@ def _decode_doclen_rows(batches):
             yield pd.concat(outs)
 
 
-def _doclens_from_postings(staged: DataFrame) -> DataFrame:
-    # (doc_id, dl) appears identically on every posting of a doc;
-    # max aggregation is partial-agg friendly (no distinct shuffle blowup).
-    return staged.groupBy("doc_id").agg(F.max("dl").alias("dl"))
+def _write_doclens(frags: DataFrame, path: str, obs) -> None:
+    """doclens/ (doc_id, dl) from a fragment set's #doclens# sentinel
+    rows (all in bucket 0).  n_docs, avgdl and total_tokens ride the
+    write job through the Observation ``obs`` (r8 floor cut)."""
+    frags.filter(
+        (F.col("bucket") == 0) & (F.col("term") == DOCLEN_TERM)
+    ).select("docs", "dls").mapInPandas(
+        _decode_doclen_rows, "doc_id long, dl long"
+    ).observe(
+        obs,
+        F.count("*").alias("n_docs"),
+        F.avg("dl").alias("avgdl"),
+        F.sum("dl").alias("total_tokens"),
+    ).write.mode("overwrite").parquet(path)
 
 
 def _finalize(spark: SparkSession, paths: IndexPaths, *extra_pipelines) -> int:
@@ -544,6 +411,68 @@ def _finalize(spark: SparkSession, paths: IndexPaths, *extra_pipelines) -> int:
     return int(ts_obs.get["n_terms"])
 
 
+def _range_fragments(
+    docs: DataFrame, id_col: str, text_col: str, from_html: bool, stem: bool,
+    n_buckets: int, n_docs: int, chunk_bits: int,
+) -> DataFrame:
+    """The one tokenize+encode pass of the term-clustered builders:
+    range-partition (doc_id, text) by doc_id, sort each partition, and
+    turn every batch into fragment block rows (+ its #doclens# row).
+
+    Range order makes every fragment block's doc span tight, so the
+    block re-chunk in :func:`_compact_segments` replicates each block
+    to ~1 target chunk (hash-partitioned batches would span the whole
+    id range and replicate to every chunk)."""
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    src = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
+    parts = max(par * 2, n_docs // (1 << chunk_bits) + 1)
+    src = src.repartitionByRange(parts, "doc_id").sortWithinPartitions("doc_id")
+    return src.mapInPandas(
+        _make_fragment_gen(text_col, from_html, stem, n_buckets), SEGMENT_SCHEMA
+    )
+
+
+def _index_from_fragments(
+    spark: SparkSession, frags: DataFrame, paths: IndexPaths, chunk_bits: int,
+    n_buckets: int, stem: bool, t0: float,
+) -> dict:
+    """The shared build tail over a fragment set: doclens + corpus stats
+    from the #doclens# sentinel rows, the canonical (bucket, chunk)
+    segments via :func:`_compact_segments`, term_stats + lineage via
+    :func:`_finalize`, then stats.json.  ``frags`` is read twice (the
+    doclens write and the re-chunk), so callers pass a persisted or
+    on-disk fragment set."""
+    from pyspark.sql import Observation
+
+    dl_obs = Observation()
+    _write_doclens(frags, paths.doclens, dl_obs)
+    agg = dl_obs.get
+    n_docs = int(agg["n_docs"])
+    avgdl = float(agg["avgdl"] or 0.0)
+
+    _compact_segments(
+        frags, chunk_bits,
+        n_sub=group_subsplits(n_docs, avgdl, chunk_bits, n_buckets),
+    ).write.mode("overwrite").partitionBy("bucket").parquet(paths.segments)
+    n_terms = _finalize(spark, paths)
+
+    stats = {
+        "n_docs": n_docs,
+        "avgdl": avgdl,
+        "total_tokens": int(agg["total_tokens"] or 0),
+        "n_terms": n_terms,
+        "n_buckets": n_buckets,
+        "block": BLOCK,
+        "chunk_bits": chunk_bits,
+        "stem": stem,
+        "k1": sqltok.K1,
+        "b": sqltok.B,
+        "build_sec": time.time() - t0,
+    }
+    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
+    return stats
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -577,72 +506,28 @@ def build_index(
     batch into finished compressed fragment blocks, and the canonical
     term-clustered (bucket, chunk) layout comes from re-chunking those
     COMPRESSED blocks through :func:`_compact_segments` — the second
-    exchange carries index bytes, not exploded postings.  The previous
-    shape staged the fully exploded posting rows (term, doc_id, tf,
-    positions-list, …) to parquet and shuffled them (measured 11.5 s of
-    a 20.7 s isolated build at 500k docs just tokenizing+writing the
-    staged form); output is byte-identical (segments/doclens/term_stats
-    exceptAll-verified at sf1.0, plus the pure-Python posting oracle
-    gates).  The checkpointed/resumable variant keeps the staged-
-    posting shape (build_index_resumable)."""
+    exchange carries index bytes, not exploded postings (the earlier
+    staged-posting shape spent 11.5 s of a 20.7 s isolated build at
+    500k docs just tokenizing+writing exploded posting rows).
+    :func:`build_index_resumable` runs the same pass per doc-id-range
+    part and the same tail, so its store is row-equal to this one."""
     t0 = time.time()
     paths = IndexPaths(out_dir)
-    from pyspark.sql import Observation
     from pyspark.storagelevel import StorageLevel
 
     docs = ensure_parallelism(docs)
     n_docs_est = docs.count()  # parquet metadata read — cheap
-    par = docs.sparkSession.sparkContext.defaultParallelism
     if chunk_bits is None:
-        chunk_bits = adaptive_chunk_bits(n_docs_est, par)
-    src = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
-    # range order makes every fragment block's doc span tight, so the
-    # block re-chunk below replicates each block to ~1 target chunk
-    # (hash-partitioned batches would span the whole id range and
-    # replicate to every chunk)
-    parts = max(par * 2, n_docs_est // (1 << chunk_bits) + 1)
-    src = src.repartitionByRange(parts, "doc_id").sortWithinPartitions("doc_id")
-    frags = src.mapInPandas(
-        _make_fragment_gen(text_col, from_html, stem, n_buckets), SEGMENT_SCHEMA
+        chunk_bits = adaptive_chunk_bits(
+            n_docs_est, docs.sparkSession.sparkContext.defaultParallelism
+        )
+    frags = _range_fragments(
+        docs, id_col, text_col, from_html, stem, n_buckets, n_docs_est, chunk_bits
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        dl_obs = Observation()
-        dl_rows = frags.filter(
-            (F.col("bucket") == 0) & (F.col("term") == DOCLEN_TERM)
-        ).select("docs", "dls")
-        dl_rows.mapInPandas(_decode_doclen_rows, "doc_id long, dl long").observe(
-            dl_obs,
-            F.count("*").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("total_tokens"),
-        ).write.mode("overwrite").parquet(paths.doclens)
-        agg = dl_obs.get  # corpus stats ride the write job (r8 floor cut)
-        n_docs = int(agg["n_docs"])
-        avgdl = float(agg["avgdl"] or 0.0)
-
-        _compact_segments(
-            frags, chunk_bits,
-            n_sub=group_subsplits(n_docs, avgdl, chunk_bits, n_buckets),
-        ).write.mode("overwrite").partitionBy("bucket").parquet(paths.segments)
+        return _index_from_fragments(spark, frags, paths, chunk_bits, n_buckets, stem, t0)
     finally:
         frags.unpersist()
-    n_terms = _finalize(spark, paths)
-
-    stats = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "total_tokens": int(agg["total_tokens"] or 0),
-        "n_terms": n_terms,
-        "n_buckets": n_buckets,
-        "block": BLOCK,
-        "chunk_bits": chunk_bits,
-        "stem": stem,
-        "k1": sqltok.K1,
-        "b": sqltok.B,
-        "build_sec": time.time() - t0,
-    }
-    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
-    return stats
 
 
 def build_index_resumable(
@@ -652,16 +537,27 @@ def build_index_resumable(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = DEFAULT_BUCKETS,
+    stem: bool = False,
+    from_html: bool = False,
     n_jobs: int = 4,
     fail_after: int | None = None,
 ) -> dict:
-    """Checkpointed build: docs are processed in ``n_jobs`` doc-id-range
-    jobs; each job writes its segments under ``part=<j>`` and commits a
-    marker.  A re-run skips committed parts, so resume-after-kill equals
-    from-scratch (FIXTURES.md §5).
+    """Checkpointed build: :func:`build_index`'s fragment pass, run over
+    ``n_jobs`` doc-id-range parts.  Each part writes its fragment rows
+    under ``_parts/part=<j>`` and then commits a
+    ``_commits/part-<j>.done`` marker recording its ``{part, lo, hi}``
+    range.  A re-run skips committed parts, so resume-after-kill equals
+    from-scratch (FIXTURES.md §5); a marker whose range differs from the
+    current split (another ``n_jobs`` or input) raises ``ValueError``.
+
+    After the last part, exactly parts ``0..n_jobs-1`` go through
+    build_index's tail, so the store is row-equal to build_index's
+    (same ``chunk_bits``, segments partitioned by bucket); ``_commits/``
+    and ``_parts/`` are deleted once stats.json is written.
 
     ``fail_after`` (tests only): raise after that many parts commit,
     simulating a mid-build crash."""
+    t0 = time.time()
     paths = IndexPaths(out_dir)
     # all metadata IO goes through the Hadoop FileSystem API so the
     # whole index root (segments + stats + commit markers) lives on one
@@ -669,60 +565,49 @@ def build_index_resumable(
     # driver replacement)
     fsio.mkdirs(spark, paths.commits)
 
-    # stats pass (cheap relative to the build; itself checkpointed)
-    if not fsio.exists(spark, os.path.join(paths.commits, "doclens.done")):
-        tokens_all = tokenize_docs(docs, id_col, text_col)
-        tokens_all.select("doc_id", "dl").write.mode("overwrite").parquet(paths.doclens)
-        fsio.write_text(spark, os.path.join(paths.commits, "doclens.done"), "")
-    doclens = spark.read.parquet(paths.doclens)
-    agg = doclens.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")).collect()[0]
-    n_docs, avgdl = int(agg["n_docs"]), float(agg["avgdl"] or 0.0)
-
-    chunk_bits = adaptive_chunk_bits(
-        n_docs, docs.sparkSession.sparkContext.defaultParallelism
-    )
     bounds = docs.agg(
-        F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
+        F.count("*").alias("n"),
+        F.min(F.col(id_col)).alias("lo"),
+        F.max(F.col(id_col)).alias("hi"),
     ).collect()[0]
-    lo, hi = int(bounds["lo"]), int(bounds["hi"])
+    n_docs_est, lo, hi = int(bounds["n"]), int(bounds["lo"]), int(bounds["hi"])
+    chunk_bits = adaptive_chunk_bits(n_docs_est, spark.sparkContext.defaultParallelism)
     span = (hi - lo + 1 + n_jobs - 1) // n_jobs
 
+    part_dirs = []
     done = 0
     for j in range(n_jobs):
+        split = {"part": j, "lo": lo + j * span, "hi": lo + (j + 1) * span}
+        part_dir = os.path.join(paths.parts, f"part={j}")
+        part_dirs.append(part_dir)
         marker = os.path.join(paths.commits, f"part-{j}.done")
         if fsio.exists(spark, marker):
+            committed = json.loads(fsio.read_text(spark, marker))
+            if committed != split:
+                raise ValueError(
+                    f"resumable build {out_dir}: part {j} was committed for "
+                    f"doc ids [{committed['lo']}, {committed['hi']}) but the "
+                    f"current split gives [{split['lo']}, {split['hi']}); "
+                    "resume with the original n_jobs and input, or start "
+                    "from an empty directory"
+                )
             continue
         part_docs = docs.filter(
-            (F.col(id_col) >= lo + j * span) & (F.col(id_col) < lo + (j + 1) * span)
+            (F.col(id_col) >= split["lo"]) & (F.col(id_col) < split["hi"])
         )
-        part_postings = doc_postings(
-            ensure_parallelism(part_docs), id_col, text_col,
-            n_buckets=n_buckets, chunk_bits=chunk_bits,
-        )
-        build_segments(
-            part_postings,
-            n_sub=group_subsplits(n_docs, avgdl, chunk_bits, n_buckets),
-        ).write.mode("overwrite").parquet(
-            os.path.join(paths.segments, f"part={j}")
-        )
-        fsio.write_text(
-            spark, marker,
-            json.dumps({"part": j, "lo": lo + j * span, "hi": lo + (j + 1) * span}),
-        )
+        _range_fragments(
+            part_docs, id_col, text_col, from_html, stem, n_buckets,
+            -(-n_docs_est // n_jobs), chunk_bits,
+        ).write.mode("overwrite").parquet(part_dir)
+        fsio.write_text(spark, marker, json.dumps(split))
         done += 1
         if fail_after is not None and done >= fail_after:
             raise RuntimeError(f"simulated crash after {done} parts")
 
-    n_terms = _finalize(spark, paths)
-    stats = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "n_terms": n_terms,
-        "n_buckets": n_buckets,
-        "resumable": True,
-        "n_jobs": n_jobs,
-    }
-    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
+    frags = spark.read.parquet(*part_dirs)
+    stats = _index_from_fragments(spark, frags, paths, chunk_bits, n_buckets, stem, t0)
+    fsio.delete(spark, paths.commits)
+    fsio.delete(spark, paths.parts)
     return stats
 
 
@@ -883,9 +768,10 @@ def build_index_fast(
     the raw corpus once — worth it when the index is long-lived and the
     corpus arrives unordered.
 
-    The term-partitioned path (``build_index``) remains as the
-    checkpointed/resumable variant with term-clustered segment layout;
-    both serve the identical query engine (equality tested).
+    ``build_index`` and ``build_index_resumable`` run this same pass
+    and then re-chunk its blocks into the term-clustered (bucket, chunk)
+    layout; all three serve the identical query engine (equality
+    tested).
     """
     t0 = time.time()
     paths = IndexPaths(out_dir)
@@ -919,25 +805,15 @@ def build_index_fast(
     #     concurrent driver threads — Spark schedules concurrent jobs
     #     fine, and on a busy cluster they pack into idle executors.
     seg = spark.read.parquet(paths.segments)
-    dl_rows = seg.filter(
-        (F.col("bucket") == 0) & (F.col("term") == DOCLEN_TERM)
-    ).select("docs", "dls")
 
     from pyspark.sql import Observation
 
     dl_obs = Observation()
-
-    def _doclens_pipeline():
-        dl_rows.mapInPandas(_decode_doclen_rows, "doc_id long, dl long").observe(
-            dl_obs,
-            F.count("*").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("total_tokens"),
-        ).write.mode("overwrite").parquet(paths.doclens)
-
     # term_stats + lineage come from _finalize (one definition for all
     # build paths — code-review r8); the doclens pipeline overlaps them
-    n_terms = _finalize(spark, paths, _doclens_pipeline)
+    n_terms = _finalize(
+        spark, paths, lambda: _write_doclens(seg, paths.doclens, dl_obs)
+    )
     agg = dl_obs.get
     stats = {
         "n_docs": int(agg["n_docs"]),
@@ -959,46 +835,6 @@ def build_index_fast(
 
 # ---- segment compaction / index merge -----------------------------------
 
-_POSTING_SCHEMA = (
-    "term string, doc_id long, tf int, positions array<int>, dl int, bucket int"
-)
-
-
-def segment_postings(seg: DataFrame) -> DataFrame:
-    """Decode segment block rows back into posting rows (term, doc_id,
-    tf, positions, dl, bucket) — the inverse of the encoders, used by
-    compaction.  Vectorized per block; doclen sentinel rows are
-    excluded (they are re-derived from the merged doclens table)."""
-    src = seg.filter(F.col("term") != DOCLEN_TERM).select(
-        "bucket", "term", "docs", "tfs", "dls", "pos"
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples():
-                d = codec.delta_decode(r.docs).astype(np.int64)
-                tf = codec.vb_decode(r.tfs).astype(np.int64)
-                dl = codec.vb_decode(r.dls).astype(np.int64)
-                pos = codec.decode_positions(r.pos, tf)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "term": r.term,
-                            "doc_id": d,
-                            "tf": tf.astype(np.int32),
-                            "positions": [list(map(int, p)) for p in pos],
-                            "dl": dl.astype(np.int32),
-                            "bucket": np.int32(r.bucket),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
-
-    return src.mapInPandas(decode, _POSTING_SCHEMA)
-
-
 def _compact_segments(
     seg: DataFrame, chunk_bits: int, n_sub: int = 1
 ) -> DataFrame:
@@ -1006,9 +842,9 @@ def _compact_segments(
     rows keyed by the target (bucket, chunk) and decode + re-encode
     inside each group.
 
-    The previous shape (``segment_postings`` → ``build_segments``)
-    exploded every block back into posting rows before the shuffle —
-    each posting carrying a Python ``list[int]`` positions cell — so
+    The earlier shape decoded every block back into posting rows
+    before the shuffle — each posting carrying a Python ``list[int]``
+    positions cell — so
     the exchange moved the fully-decoded corpus (~15× the stored
     bytes) and the Arrow boundary paid a per-posting list round-trip
     both ways.  Guide §8's rule: the shuffle only needs to decide
@@ -1017,8 +853,9 @@ def _compact_segments(
     vectorized inside the group.  A source block whose doc range spans
     several target chunks is replicated to each (``explode`` over its
     chunk span — fragment blocks span 1-2 chunks) and trimmed after
-    decode, so emitted block rows are identical to the posting-level
-    path (equality pytest-gated via the compact-vs-rebuild gates)."""
+    decode, so emitted block rows are identical to encoding the
+    (term, doc_id)-sorted postings directly (equality pytest-gated via
+    the compact-vs-rebuild gates)."""
     src = seg.filter(F.col("term") != DOCLEN_TERM).select(
         "bucket", "term", "n", "docs", "tfs", "dls", "pos",
         F.explode(
@@ -1129,13 +966,13 @@ def compact_index(
 ) -> dict:
     """Merge one or more segment stores into ONE canonical compacted
     index — the north-star's "externally merged" step, Spark-first:
-    instead of a driver-side k-way file merge, the fragment rows are
-    decoded back to postings, re-chunked on the canonical doc-range key
-    (``chunk = doc_id >> chunk_bits``), and re-encoded through the SAME
-    salted (bucket, chunk) shuffle the term-partitioned builder
-    uses — one shuffle, term skew bounded by the chunk salt, arbitrary
-    input layout (streaming ``stream_batch=*`` appends, fast-path
-    per-batch fragments, or other compacted stores).
+    instead of a driver-side k-way file merge, the compressed block
+    rows are re-chunked on the canonical doc-range key
+    (``chunk = doc_id >> chunk_bits``) through the SAME
+    :func:`_compact_segments` shuffle ``build_index`` ends with — one
+    shuffle, term skew bounded by the chunk salt, arbitrary input layout
+    (streaming ``stream_batch=*`` appends, fast-path per-batch
+    fragments, or other compacted stores).
 
     Use cases: collapsing a long-running incremental-ingest segment
     store's accumulated micro-batch fragments (streaming/incremental.py
@@ -1146,8 +983,8 @@ def compact_index(
     postings.
 
     Returns the new stats dict; the output serves the unchanged query
-    engine (equality with a from-scratch single build is pytest-gated,
-    tests/test_index.py)."""
+    engine, like every builder's (equality with a from-scratch
+    ``build_index`` store is pytest-gated, tests/test_index.py)."""
     t0 = time.time()
     paths = IndexPaths(out_dir)
     # per-root reads unioned: multiple partitioned roots in one

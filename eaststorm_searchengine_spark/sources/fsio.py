@@ -52,3 +52,9 @@ def exists(spark: SparkSession, path: str) -> bool:
 def mkdirs(spark: SparkSession, path: str) -> None:
     fs, hpath = _fs(spark, path)
     fs.mkdirs(hpath)
+
+
+def delete(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path``; a missing path is a no-op."""
+    fs, hpath = _fs(spark, path)
+    fs.delete(hpath, True)

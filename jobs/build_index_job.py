@@ -5,8 +5,13 @@ Usage (north_rule deployment shape):
     spark-submit --py-files engine.zip jobs/build_index_job.py \
         --input /data/pages_or_documents_parquet \
         --output /indexes/run1 \
-        [--text-col html --from-html] [--path fast|term|resumable] \
-        [--buckets 16] [--stem]
+        [--path fast|term|resumable] [--n-jobs 4] \
+        [--id-col doc_id] [--text-col html --from-html] [--stem] \
+        [--buckets 16]
+
+``--from-html`` and ``--stem`` apply to every path; ``--n-jobs`` sets
+the doc-id-range part count of the resumable path (re-run the same
+command after a crash to resume).
 
 ``engine.zip`` = ``python tools/make_pyfiles.py`` (zips the
 eaststorm_searchengine_spark package).  On a real cluster the same
@@ -48,15 +53,13 @@ def main() -> None:
         id_col=args.id_col,
         text_col=args.text_col,
         n_buckets=args.buckets,
+        from_html=args.from_html,
+        stem=args.stem,
     )
     if args.path == "fast":
-        stats = ib.build_index_fast(
-            spark, docs, args.output, from_html=args.from_html, stem=args.stem, **kw
-        )
+        stats = ib.build_index_fast(spark, docs, args.output, **kw)
     elif args.path == "term":
-        stats = ib.build_index(
-            spark, docs, args.output, from_html=args.from_html, stem=args.stem, **kw
-        )
+        stats = ib.build_index(spark, docs, args.output, **kw)
     else:
         stats = ib.build_index_resumable(spark, docs, args.output, n_jobs=args.n_jobs, **kw)
     print(json.dumps(stats))

@@ -1,6 +1,6 @@
 """Edge corpora: empty/punctuation-only/null texts must still be
-counted in corpus stats (n_docs, avgdl) and serve correct BM25 — both
-build paths, checked against the DuckDB oracle."""
+counted in corpus stats (n_docs, avgdl) and serve correct BM25 — every
+build path, checked against the DuckDB oracle."""
 
 import shutil
 
@@ -12,6 +12,7 @@ from eaststorm_searchengine_spark.operators.bm25 import BM25Index
 from eaststorm_searchengine_spark.operators.index_build import (
     build_index,
     build_index_fast,
+    build_index_resumable,
 )
 
 TMP = "/root/repo/_tmp/t_edge"
@@ -28,7 +29,10 @@ ROWS = [
 ]
 
 
-@pytest.mark.parametrize("builder,tag", [(build_index, "term"), (build_index_fast, "fast")])
+@pytest.mark.parametrize(
+    "builder,tag",
+    [(build_index, "term"), (build_index_fast, "fast"), (build_index_resumable, "resumable")],
+)
 def test_edge_corpus_stats_and_bm25(spark, builder, tag):
     root = f"{TMP}_{tag}"
     shutil.rmtree(root, ignore_errors=True)

@@ -1,8 +1,9 @@
 """Index-build correctness: segments decode back to exactly the
-postings a pure-Python oracle computes; both build paths agree;
+postings a pure-Python oracle computes; the build paths agree;
 resume-after-crash equals from-scratch (FIXTURES.md §5)."""
 
 import collections
+import json
 import os
 import shutil
 
@@ -13,6 +14,7 @@ from eaststorm_searchengine_spark.operators import codec
 from eaststorm_searchengine_spark.operators.bm25 import BM25Index
 from eaststorm_searchengine_spark.operators.index_build import (
     DOCLEN_TERM,
+    SEGMENT_COLS,
     build_index,
     build_index_fast,
     build_index_resumable,
@@ -92,28 +94,91 @@ def test_segments_match_python_oracle(spark, docs_rows, builder, tag):
     assert all(r["status"] == "complete" for r in lin)
 
 
-def test_resumable_crash_resume_equals_scratch(spark):
+def _store_rows(spark, root):
+    """Everything a store serves from: segments (all SEGMENT_COLS,
+    blobs as bytes), doclens, term_stats and the stats.json corpus
+    figures."""
+    seg = sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in spark.read.parquet(os.path.join(root, "segments"))
+        .select(*SEGMENT_COLS)
+        .collect()
+    )
+    dl = sorted(tuple(r) for r in spark.read.parquet(os.path.join(root, "doclens")).collect())
+    ts = sorted(
+        tuple(r)
+        for r in spark.read.parquet(os.path.join(root, "term_stats"))
+        .select("term", "df", "bucket")
+        .collect()
+    )
+    with open(os.path.join(root, "stats.json")) as f:
+        st = json.load(f)
+    keys = ("n_docs", "avgdl", "total_tokens", "n_terms", "chunk_bits")
+    return seg, dl, ts, {k: st[k] for k in keys}
+
+
+def _resume_case(spark, case):
+    """(docs, builder kwargs) for one resume-parity case."""
+    from eaststorm_searchengine_spark import corpus
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    if case == "plain_edge":
+        edge = spark.createDataFrame(
+            [(500, ""), (501, None), (502, "!!! ??? ...")], "doc_id long, text string"
+        )
+        return docs.unionByName(edge), {}
+    if case == "stem":
+        return docs, {"stem": True}
+    pages = f"{TMP}/t_resume_pages"
+    shutil.rmtree(pages, ignore_errors=True)
+    corpus.pages_with_ids(spark, SF).select("doc_id", "html").write.parquet(pages)
+    return spark.read.parquet(pages), {"text_col": "html", "from_html": True}
+
+
+@pytest.mark.parametrize("case", ["plain_edge", "stem", "html"])
+def test_resumable_crash_resume_equals_scratch(spark, case):
+    """Crash after 2 of 4 parts + resume == a from-scratch resumable
+    build == build_index, row for row, for plain text with token-less
+    docs, the stemming analyzer and HTML input."""
+    docs, kw = _resume_case(spark, case)
+    a = f"{TMP}/t_idx_resume_{case}"
+    b = f"{TMP}/t_idx_scratch_{case}"
+    c = f"{TMP}/t_idx_plain_{case}"
+    for p in (a, b, c):
+        shutil.rmtree(p, ignore_errors=True)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index_resumable(spark, docs, a, n_jobs=4, fail_after=2, **kw)
+    markers = [m for m in os.listdir(os.path.join(a, "_commits")) if m.endswith(".done")]
+    assert sorted(markers) == ["part-0.done", "part-1.done"]
+    # resume: skips the 2 committed parts, finishes the rest
+    build_index_resumable(spark, docs, a, n_jobs=4, **kw)
+    build_index_resumable(spark, docs, b, n_jobs=4, **kw)
+    build_index(spark, docs, c, **kw)
+    want = _store_rows(spark, c)
+    assert len(want[0]) > 100 and len(want[1]) == docs.count()
+    assert _store_rows(spark, a) == want
+    assert _store_rows(spark, b) == want
+    # a finished resumable store holds only the canonical layout
+    for root in (a, b):
+        assert not os.path.exists(os.path.join(root, "_parts"))
+        assert not os.path.exists(os.path.join(root, "_commits"))
+        seg_dirs = [
+            d for d in os.listdir(os.path.join(root, "segments")) if not d.startswith(("_", "."))
+        ]
+        assert seg_dirs and all(d.startswith("bucket=") for d in seg_dirs)
+
+
+def test_resumable_refuses_mismatched_split(spark):
+    """Resuming with another n_jobs must fail loudly, not skip the
+    committed parts of the old split and build a partial index."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = f"{TMP}/t_idx_resume"
-    b = f"{TMP}/t_idx_scratch"
+    a = f"{TMP}/t_idx_resplit"
     shutil.rmtree(a, ignore_errors=True)
-    shutil.rmtree(b, ignore_errors=True)
     with pytest.raises(RuntimeError, match="simulated crash"):
         build_index_resumable(spark, docs, a, n_jobs=4, fail_after=2)
-    # resume: skips the 2 committed parts, finishes the rest
-    build_index_resumable(spark, docs, a, n_jobs=4)
-    build_index_resumable(spark, docs, b, n_jobs=4)
-    got = _decode_index(spark, a)
-    want = _decode_index(spark, b)
-    assert got == want
-    # and the resumable index serves identical queries to the plain one
-    c = f"{TMP}/t_idx_plain"
-    shutil.rmtree(c, ignore_errors=True)
-    build_index(spark, docs, c)
-    q = [(1, "join"), (2, "hash window"), (3, "dup")]
-    ra = [tuple(r) for r in BM25Index(spark, a).search(q, k=10, score_round=4).collect()]
-    rc = [tuple(r) for r in BM25Index(spark, c).search(q, k=10, score_round=4).collect()]
-    assert ra == rc
+    with pytest.raises(ValueError, match=r"\[0, 125\).*\[0, 250\)"):
+        build_index_resumable(spark, docs, a, n_jobs=2)
+    assert not os.path.exists(os.path.join(a, "stats.json"))
 
 
 def test_fast_and_term_paths_serve_identical_results(spark):
@@ -272,8 +337,8 @@ def test_skew_corpus_deterministic_and_hot_fraction(spark):
 
 
 def test_vectorized_encoder_matches_loopy_reference():
-    """r6: `_encode_bucket_chunk_vec` (production) is byte-identical to
-    the per-run loopy `_encode_blocks` path on randomized groups —
+    """r6: the production `_encode_sorted_runs` is byte-identical to
+    the per-run loopy `_encode_bucket_chunk` path on randomized groups —
     tiny runs, multi-block runs, empty position lists, adversarial
     doc-id gaps (varbyte width boundaries)."""
     import numpy as np
@@ -281,8 +346,20 @@ def test_vectorized_encoder_matches_loopy_reference():
 
     from eaststorm_searchengine_spark.operators.index_build import (
         _encode_bucket_chunk,
-        _encode_bucket_chunk_vec,
+        _encode_sorted_runs,
     )
+
+    def vectorized(pdf):
+        pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
+        return _encode_sorted_runs(
+            pdf["term"].to_numpy(),
+            pdf["bucket"].to_numpy(dtype=np.int64),
+            pdf["chunk"].to_numpy(dtype=np.int64),
+            pdf["doc_id"].to_numpy(dtype=np.int64),
+            pdf["tf"].to_numpy(dtype=np.int64),
+            pdf["dl"].to_numpy(dtype=np.int64),
+            pdf["positions"].tolist(),
+        )
 
     rng = np.random.RandomState(1234)
 
@@ -315,7 +392,7 @@ def test_vectorized_encoder_matches_loopy_reference():
     ]
     for i, pdf in enumerate(cases):
         a = _encode_bucket_chunk(pdf.copy())
-        b = _encode_bucket_chunk_vec(pdf.copy())
+        b = vectorized(pdf.copy())
         assert len(a) == len(b), i
         for col in a.columns:
             assert a[col].tolist() == b[col].tolist(), (i, col)
@@ -341,20 +418,19 @@ def test_group_subsplits_rule():
     assert group_subsplits(10**12, 300.0, 10, 16) == 1
 
 
-def test_build_segments_subsplit_byte_identical(spark):
-    """Sub-splitting the encode groups on a term-hash salt must not
+def test_compact_segments_subsplit_byte_identical(spark):
+    """Sub-splitting the re-chunk groups on a term-hash salt must not
     change a single stored byte — every (term, chunk) run still lands
     whole in exactly one group."""
-    from eaststorm_searchengine_spark.operators.index_build import (
-        build_segments,
-        doc_postings,
-    )
+    from eaststorm_searchengine_spark.operators.index_build import _compact_segments
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    postings = doc_postings(docs, "doc_id", "text", n_buckets=4, chunk_bits=6)
+    root = f"{TMP}/t_subsplit_frags"
+    shutil.rmtree(root, ignore_errors=True)
+    build_index_fast(spark, spark.read.parquet(f"{SF}/documents.parquet"), root, n_buckets=4)
+    frags = spark.read.parquet(os.path.join(root, "segments")).select(*SEGMENT_COLS)
 
     def rows(n_sub):
-        out = build_segments(postings, n_sub=n_sub).collect()
+        out = _compact_segments(frags, 6, n_sub=n_sub).collect()
         return sorted(
             (
                 r["bucket"], r["term"], r["chunk"], r["first_doc"],
