@@ -148,9 +148,11 @@ def synthesize_pages(spark, sf_dir: str):
     """documents.parquet → pages DataFrame, distributed via mapInPandas
     (each executor synthesizes its split independently — scales to any
     corpus size; no driver-side materialization)."""
+    from .operators.index_build import ensure_parallelism
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_docs = docs.count()
-    docs = _spread(docs)
+    docs = ensure_parallelism(docs)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -163,20 +165,13 @@ def synthesize_pages(spark, sf_dir: str):
     return docs.select("doc_id", "text", "lang").mapInPandas(gen, PAGES_SCHEMA)
 
 
-def _spread(docs):
-    """Single-file feedstock scans coalesce to 1-2 splits; spread so the
-    per-row HTML synthesis parallelizes."""
-    target = docs.sparkSession.sparkContext.defaultParallelism * 2
-    if docs.rdd.getNumPartitions() < target:
-        return docs.repartition(target)
-    return docs
-
-
 def pages_with_ids(spark, sf_dir: str):
     """pages + the stable int64 doc_id (same id space as documents)."""
+    from .operators.index_build import ensure_parallelism
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_docs = docs.count()
-    docs = _spread(docs)
+    docs = ensure_parallelism(docs)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -273,9 +268,9 @@ def synthesize_skew_docs(spark, n_docs: int, vocab: int = 10_000,
     return base.mapInPandas(gen, "doc_id long, text string")
 
 
-# Shared Zipf bench query sets (single source for bench.py and
-# tools/wand_engine_bench.py — code-review r05: the two copies had
-# silently drifted, making their decode-fraction numbers incomparable).
+# Shared Zipf bench query sets (single source for bench.py's zipf
+# leaves — code-review r05: two copies had silently drifted, making
+# their decode-fraction numbers incomparable).
 # Anchored: one selective term with per-chunk df >= k (the WAND-
 # favorable shape); dense controls: common-terms-only (the exhaustive-
 # favorable shape the cost-based "auto" must route correctly).

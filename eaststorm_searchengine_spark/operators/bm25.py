@@ -1,15 +1,22 @@
 """BM25 top-k query engine over the compressed segment index.
 
-Two executors, verified equal in tests:
+Three executors, bitwise equal in tests, all ``fn(terms, k, counters)``
+over one interface: a list of ``_TermPostings`` (``maxscore.py``) — one
+term's block rows in one doc-range chunk with its idf, lazy cached
+block decode and the decode counters:
 
 * ``exhaustive`` — vectorized term-at-a-time: decode every matching
-  block, accumulate per-doc scores with ``np.add.at``, local top-k per
-  doc-range chunk, global top-k via window.  At sandbox scale this is
-  the throughput winner (numpy-bound, zero per-doc Python).
-* ``wand`` — document-at-a-time block-max WAND (``wand.py``): skips
-  whole blocks whose upper bound (idf · block max_tfnorm) cannot reach
-  the running threshold, decoding lazily.  The scale path for deep
-  corpora / selective queries.
+  block, accumulate per-doc scores with ``np.add.at``.  The dense-query
+  winner (numpy-bound, zero per-doc Python).
+* ``maxscore`` — vectorized block-max MaxScore (``maxscore.py``):
+  candidate waves from essential terms only, fence-pruned decode.  What
+  ``method="auto"`` serves selective queries with.
+* ``wand`` — interval-at-a-time block-max WAND (``wand.py``): skips
+  whole fence intervals whose summed block upper bounds cannot reach
+  the running threshold, never decoding their blocks.
+
+``search``, ``phrase_search`` and ``explain`` share one query-resolution
+step (``BM25Index._resolve``): analyze, driver-side df, pruned scan.
 
 Distribution model: segment blocks are grouped by ``chunk`` (doc
 range); each chunk computes its local top-k independently (scores use
@@ -251,6 +258,51 @@ class BM25Index:
                 }
         return {t: v for t in terms if (v := self._df_cache.get(t)) is not None}
 
+    def _resolve(
+        self,
+        queries: list[tuple[int, str]],
+        k: int,
+        cols: list[str],
+        method: str = "auto",
+        final_rank: str = "window",
+        dedupe: bool = True,
+    ):
+        """The query-resolution step every entry point shares: argument
+        check → rebuild check → analyze (deduped and sorted; a phrase
+        keeps its token order, ``dedupe=False``) → driver-side df (r8:
+        no per-query broadcast-join job) → the indexed terms → a
+        bucket- and term-pruned scan of ``cols``.  Driver-merge queries
+        scan through the one-job serving session (no AQE barrier);
+        batch/window queries keep the AQE session.  Returns
+        ``(qterms, dfs, segs)``; ``segs`` is None when no query term is
+        indexed."""
+        if k < 1:
+            raise ValueError(f"k must be >= 1, got {k}")
+        if method not in METHODS:
+            raise ValueError(f"unknown method {method!r}; expected one of {METHODS}")
+        if final_rank not in FINAL_RANKS:
+            raise ValueError(
+                f"unknown final_rank {final_rank!r}; expected one of {FINAL_RANKS}"
+            )
+        self._refresh_if_rebuilt()
+        qterms = {}
+        for qid, q in queries:
+            toks = self._analyze(q)
+            qterms[qid] = sorted(set(toks)) if dedupe else toks
+        all_terms = sorted({t for ts in qterms.values() for t in ts})
+        dfs = self._term_dfs(all_terms) if all_terms else {}
+        present = [t for t in all_terms if t in dfs]
+        if not present:
+            return qterms, dfs, None
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in present})
+        src = self._serve_segs() if final_rank == "driver" else self._segs_df
+        segs = (
+            src.filter(F.col("bucket").isin(buckets))  # partition pruning
+            .filter(F.col("term").isin(present))
+            .select(*cols)
+        )
+        return qterms, dfs, segs
+
     # -- search -----------------------------------------------------------
     def search(
         self,
@@ -269,26 +321,27 @@ class BM25Index:
         shared tokenizer; duplicate query terms are deduped (BM25 sums
         distinct terms, matching the DuckDB oracle).
 
-        ``method``: ``"auto"`` (default since r5) — per-query
-        cost-based choice from the broadcast df stats: the selective
+        ``method``: ``"auto"`` (default since r5) — per-(query, chunk)
+        cost-based choice from the driver-resolved df map: the selective
         block-skipping executor when a selective term exists,
         exhaustive for dense-only queries.  Since r7 the selective
         executor is ``"maxscore"`` (vectorized block-max MaxScore —
         candidate waves from essential terms only, fence-pruned
-        segmented decode); ``"wand"`` (block-max document-at-a-time
-        per Ding & Suel) is retained as the north-star-named reference
-        executor, and ``"exhaustive"`` (vectorized term-at-a-time)
-        scores everything.  All four settings return identical results
-        (executor equality is bitwise-tested); at the 200k-doc Zipf
-        bench maxscore measured 1.3-1.6× exhaustive and ~4× wand
+        segmented decode); ``"wand"`` (interval-at-a-time block-max
+        WAND per Ding & Suel) is retained as the north-star-named
+        reference executor, and ``"exhaustive"`` (vectorized
+        term-at-a-time) scores everything.  All four settings return
+        identical results (executor equality is bitwise-tested); at the
+        200k-doc Zipf bench maxscore measured 1.3-1.6× exhaustive
         (BASELINE.md r7).
 
         Plan: segment scan (bucket directory pruning from the
-        python-computable term hash + term predicate pushdown) ⋈
-        broadcast term_stats (per-term df → idf computed executor-side)
-        → per-chunk top-k → global rank.  Terms absent from the corpus
+        python-computable term hash + term predicate pushdown) →
+        per-chunk top-k (df resolved driver-side, idf shipped in the
+        task closure) → global rank.  Terms absent from the corpus
         simply never match (== the reference's silent per-term
-        try/catch, SearchServer.java:117-148).
+        try/catch, SearchServer.java:117-148).  ``k < 1``, an unknown
+        ``method`` or an unknown ``final_rank`` raise ``ValueError``.
 
         ``final_rank``: how the ≤ chunks×k candidate rows per query
         become the global top-k.  ``"window"`` (default) ranks with a
@@ -308,37 +361,17 @@ class BM25Index:
         ``decision_acc``: optional dict of Spark accumulators keyed by
         ``DECISION_REASONS`` — per-(query, chunk) records of what the
         auto cost model chose and why (VERDICT r05 #1)."""
-        self._refresh_if_rebuilt()
-        qterms: dict[int, list[str]] = {
-            qid: sorted(set(self._analyze(q))) for qid, q in queries
-        }
-        all_terms = sorted({t for ts in qterms.values() for t in ts})
-
-        out_schema = "query_id int, doc_id long, score double"
-        if not all_terms:
-            empty = self.spark.createDataFrame([], out_schema)
-            return self._rank(empty, k, score_round, final_rank)
-
-        # df resolved driver-side (one-time cached map / bounded
-        # filtered collect) — no per-query broadcast-join job
-        dfs = self._term_dfs(all_terms)
-        present_terms = [t for t in all_terms if t in dfs]
-        if not present_terms:
-            empty = self.spark.createDataFrame([], out_schema)
-            return self._rank(empty, k, score_round, final_rank)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in present_terms})
-        # driver-merge queries run through the one-job serving session
-        # (no AQE barrier); batch/window queries keep the AQE session
-        segs_src = self._serve_segs() if final_rank == "driver" else self._segs_df
-        segs = (
-            segs_src
-            .filter(F.col("bucket").isin(buckets))  # partition pruning
-            .filter(F.col("term").isin(present_terms))
-            .select("term", "chunk", "first_doc", "last_doc", "n",
-                    "max_tf", "min_dl", "docs", "tfs", "dls")
+        qmap, dfs, segs = self._resolve(
+            queries, k,
+            ["term", "chunk", "first_doc", "last_doc", "n",
+             "max_tf", "min_dl", "docs", "tfs", "dls"],
+            method, final_rank,
         )
-
-        avgdl, n_docs, qmap = self.avgdl, self.n_docs, qterms
+        out_schema = "query_id int, doc_id long, score double"
+        if segs is None:
+            empty = self.spark.createDataFrame([], out_schema)
+            return self._rank(empty, k, score_round, final_rank)
+        avgdl, n_docs = self.avgdl, self.n_docs
 
         def score_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
             counters: dict | None = {} if decode_acc is not None else None
@@ -367,7 +400,7 @@ class BM25Index:
                     continue
                 if method == "auto":
                     decision = _wand_decision(
-                        {t: by_term[t] for t in present}, k, n_docs, dfs=dfs
+                        {t: by_term[t] for t in present}, k, n_docs, dfs
                     )
                     if decision_counts is not None:
                         decision_counts[decision] = (
@@ -386,22 +419,15 @@ class BM25Index:
                         if decision in ("wand", "dense_long_run")
                         else _exhaustive_topk
                     )
-                elif method == "wand":
-                    fn = wand_topk
-                elif method == "maxscore":
-                    fn = maxscore_topk
                 else:
-                    fn = _exhaustive_topk
-                # every executor (wand included since its r10 interval
-                # rewrite) shares the per-chunk _TermPostings handles:
-                # a term's blocks decode once per CHUNK across the batch
-                docs_a, scores_a = fn(
-                    [tp_for(t) for t in present],
-                    [idf[t] for t in present],
-                    k,
-                    avgdl,
-                    counters=counters,
-                )
+                    fn = _EXECUTORS[method]
+                # every executor shares the per-chunk _TermPostings
+                # handles: a term's blocks decode once per CHUNK across
+                # the batch; begin_query is the per-query prologue
+                tps = [tp_for(t) for t in present]
+                for tp in tps:
+                    tp.begin_query(counters)
+                docs_a, scores_a = fn(tps, k, counters)
                 for d, s in zip(docs_a, scores_a):
                     out_rows.append({"query_id": qid, "doc_id": int(d), "score": float(s)})
             if decode_acc is not None and counters:
@@ -441,9 +467,10 @@ class BM25Index:
         scorer would pick and why, computed from the SAME block-metadata
         frames ``score_chunk`` hands to ``_wand_decision`` (equality
         with the decision accumulators is pytest-gated).  Reads only
-        block metadata (term, chunk, first_doc, n + broadcast df) —
-        posting blobs are never touched, so the cost is the pruned
-        metadata scan, bounded by the query terms' block counts.
+        block metadata (term, chunk, n) plus the driver-side df map
+        ``search`` uses — posting blobs are never touched, so the cost
+        is the pruned metadata scan, bounded by the query terms' block
+        counts.
 
         Returns DataFrame(query_id, chunk, decision, n_terms_present,
         rarest_term, rarest_df, rarest_chunk_postings) where
@@ -452,38 +479,22 @@ class BM25Index:
         the MaxScore executor since r7 — or the rejection reason) and
         ``rarest_chunk_postings`` is the chunk-local Σn of the rarest
         term — the quantity the anchor rule tests against ``k``."""
-        self._refresh_if_rebuilt()
-        qterms: dict[int, list[str]] = {
-            qid: sorted(set(self._analyze(q))) for qid, q in queries
-        }
-        all_terms = sorted({t for ts in qterms.values() for t in ts})
+        qterms, dfs, segs = self._resolve(queries, k, ["term", "chunk", "n"])
         schema = (
             "query_id int, chunk int, decision string, n_terms_present int, "
             "rarest_term string, rarest_df long, rarest_chunk_postings long"
         )
-        if not all_terms:
+        if segs is None:
             return self.spark.createDataFrame([], schema)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in all_terms})
-        stats = self._stats_df.filter(F.col("term").isin(all_terms)).select("term", "df")
-        meta = (
-            self._segs_df
-            .filter(F.col("bucket").isin(buckets))  # partition pruning
-            .filter(F.col("term").isin(all_terms))
-            .select("term", "chunk", "first_doc", "n")
-            .join(F.broadcast(stats), "term")
-            .toPandas()
-        )
         rows = []
-        n_docs = self.n_docs
-        for chunk, cg in meta.groupby("chunk"):
-            by_term = {t: g.sort_values("first_doc") for t, g in cg.groupby("term")}
+        for chunk, cg in segs.toPandas().groupby("chunk"):
+            by_term = {t: g for t, g in cg.groupby("term")}
             for qid, terms in qterms.items():
                 present = {t: by_term[t] for t in terms if t in by_term}
                 if not present:
                     continue
-                decision = _wand_decision(present, k, n_docs)
-                dfs = {t: int(g["df"].iloc[0]) for t, g in present.items()}
-                rarest = min(dfs, key=lambda t: dfs[t])
+                decision = _wand_decision(present, k, self.n_docs, dfs)
+                rarest = min(present, key=lambda t: dfs[t])
                 rows.append(
                     (
                         int(qid), int(chunk), decision, len(present), rarest,
@@ -505,28 +516,14 @@ class BM25Index:
         position lists only for documents that contain all terms.
         Same distribution model as ``search``.
         """
-        self._refresh_if_rebuilt()
-        pterms: dict[int, list[str]] = {
-            qid: self._analyze(p) for qid, p in phrases
-        }
-        all_terms = sorted({t for ts in pterms.values() for t in ts})
-        out_schema = "query_id int, doc_id long, score double"
-        if not all_terms:
-            return self._rank(self.spark.createDataFrame([], out_schema), k, score_round)
-
-        # df resolved driver-side, same as search() (r8): no per-query
-        # broadcast-join job on the phrase path either
-        dfs = self._term_dfs(all_terms)
-        present_terms = [t for t in all_terms if t in dfs]
-        if not present_terms:
-            return self._rank(self.spark.createDataFrame([], out_schema), k, score_round)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in present_terms})
-        segs = (
-            self._segs_df
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(present_terms))
-            .select("term", "chunk", "first_doc", "n", "docs", "tfs", "dls", "pos")
+        pterms, dfs, segs = self._resolve(
+            phrases, k,
+            ["term", "chunk", "first_doc", "n", "docs", "tfs", "dls", "pos"],
+            dedupe=False,
         )
+        out_schema = "query_id int, doc_id long, score double"
+        if segs is None:
+            return self._rank(self.spark.createDataFrame([], out_schema), k, score_round)
         avgdl, n_docs, k1, b = self.avgdl, self.n_docs, sqltok.K1, sqltok.B
 
         def match_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -657,7 +654,7 @@ class BM25Index:
         return ranked
 
 
-# the four outcomes of the auto cost model, in accumulator-report order
+# the five outcomes of the auto cost model, in accumulator-report order
 DECISION_REASONS = (
     "wand", "single_term", "no_selective", "anchor_thin", "dense_long_run",
 )
@@ -690,9 +687,7 @@ def _dense_long_run_threshold(n_terms: int) -> int:
     )
 
 
-def _wand_decision(
-    term_chunk_blocks: dict, k: int, n_docs: int, dfs: dict | None = None
-) -> str:
+def _wand_decision(term_chunk_blocks: dict, k: int, n_docs: int, dfs: dict) -> str:
     """Per-(query, chunk) cost decision between the executors, with the
     reason exposed for the decision accumulators (VERDICT r05 #1).
     Returns one of ``DECISION_REASONS``: ``"wand"`` (historical key:
@@ -701,16 +696,12 @@ def _wand_decision(
     (``"single_term"`` — nothing to skip against; ``"no_selective"`` —
     every query term matches ≥10% of the corpus; ``"anchor_thin"`` —
     the rarest term has fewer than ``k`` postings in THIS chunk, so θ
-    collapses).  ``dfs``: optional precomputed term→df map (the
-    driver-resolved serving path, r8) — when given, the block frames
-    need no ``df`` column."""
+    collapses — measured r5: 99.8% of blocks decoded).  ``dfs``: the
+    driver-resolved term→df map (r8); the block frames need only
+    ``n``."""
     if len(term_chunk_blocks) < 2:
         return "single_term"
-    if dfs is None:
-        dfs = {t: int(g["df"].iloc[0]) for t, g in term_chunk_blocks.items()}
-    else:
-        dfs = {t: dfs[t] for t in term_chunk_blocks}
-    rarest = min(dfs, key=lambda t: dfs[t])
+    rarest = min(term_chunk_blocks, key=lambda t: dfs[t])
     if dfs[rarest] * 10 > n_docs:
         # no selective term anywhere in the corpus — but if this
         # chunk's posting runs are LONG, MaxScore wins even dense
@@ -726,78 +717,17 @@ def _wand_decision(
     return "wand"
 
 
-def _choose_wand(term_chunk_blocks: dict, k: int, n_docs: int) -> bool:
-    """Per-(query, chunk) cost decision between the executors.  Both
-    are bitwise-identical (pytest), so this is purely about cost:
-
-    * block-max WAND pays only when a SELECTIVE term exists to tighten
-      the threshold — dense-only queries (every term matches ≥10% of
-      docs) decode everything anyway, where the vectorized
-      term-at-a-time executor wins;
-    * AND the rarest term must be able to anchor THIS chunk's top-k:
-      with fewer than ``k`` of its postings in the chunk, θ collapses
-      to common-only scores and block skipping never engages —
-      measured r5: 99.8% of blocks decoded through the pure-Python
-      doc-at-a-time loop, i.e. exhaustive cost without the
-      vectorization (BASELINE.md, Zipf corpus).  The chunk-local
-      posting count comes free off the block metadata (Σn).
-    """
-    return _wand_decision(term_chunk_blocks, k, n_docs) == "wand"
-
-
 def _exhaustive_topk(
-    term_blocks: list[pd.DataFrame],
-    idfs: list[float],
-    k: int,
-    avgdl: float,
-    counters: dict | None = None,
+    terms: list[_TermPostings], k: int, counters: dict | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized term-at-a-time scoring of one chunk.  Deterministic:
-    terms arrive sorted, accumulation order fixed.
-
-    r7: one concatenated codec pass per (term, stream) instead of one
-    per BLOCK — the wire format is self-delimiting, so bytes decode
-    identically (codec.vb_decode_concat / delta_decode_concat, both
-    equality pytest-gated) while the fixed per-call numpy overhead is
-    paid ~128× less often at serving spans."""
+    terms arrive sorted, accumulation order fixed.  Every block of
+    every term decodes (once per chunk on the shared handles)."""
     doc_parts, score_parts = [], []
-    for blocks, w in zip(term_blocks, idfs):
-        if isinstance(blocks, _TermPostings):
-            # shared per-chunk postings (bm25.score_chunk batches many
-            # queries over one chunk): blocks decode once per CHUNK —
-            # counters then record fresh decodes only (honest)
-            if counters is not None:
-                counters["blocks_total"] = (
-                    counters.get("blocks_total", 0) + len(blocks.n)
-                )
-                # .full() below records blocks_decoded (fresh) AND
-                # blocks_logical (= every block, what a cold cache
-                # would decode this query) — ADVICE r07.  New query
-                # against a possibly shared handle: reset the
-                # per-query logical-dedup tag first
-                blocks.begin_query()
-            d, tfn = blocks.full(counters)
-            doc_parts.append(d)
-            score_parts.append(w * tfn)
-            continue
-        if counters is not None:
-            counters["blocks_total"] = counters.get("blocks_total", 0) + len(blocks)
-            counters["blocks_decoded"] = (
-                counters.get("blocks_decoded", 0) + len(blocks)
-            )
-            counters["blocks_logical"] = (
-                counters.get("blocks_logical", 0) + len(blocks)
-            )
-        d = codec.delta_decode_concat(
-            blocks["docs"].tolist(), blocks["n"].to_numpy(dtype=np.int64)
-        ).astype(np.int64)
-        tf = codec.vb_decode_concat(blocks["tfs"].tolist()).astype(np.float64)
-        dl = codec.vb_decode_concat(blocks["dls"].tolist()).astype(np.float64)
-        tfn = (tf * (sqltok.K1 + 1.0)) / (
-            tf + sqltok.K1 * (1.0 - sqltok.B + sqltok.B * dl / avgdl)
-        )
+    for t in terms:
+        d, tfn = t.full(counters)
         doc_parts.append(d)
-        score_parts.append(w * tfn)
+        score_parts.append(t.idf * tfn)
     all_docs = np.concatenate(doc_parts)
     all_scores = np.concatenate(score_parts)
     uniq, inv = np.unique(all_docs, return_inverse=True)
@@ -807,6 +737,15 @@ def _exhaustive_topk(
     # the k-boundary arbitrarily, violating the doc_id-asc tie-break
     order = np.lexsort((uniq, -agg))[:k]
     return uniq[order], agg[order]
+
+
+_EXECUTORS = {
+    "exhaustive": _exhaustive_topk,
+    "maxscore": maxscore_topk,
+    "wand": wand_topk,
+}
+METHODS = ("auto", *_EXECUTORS)
+FINAL_RANKS = ("window", "driver")
 
 
 def bm25_score_dataframe(

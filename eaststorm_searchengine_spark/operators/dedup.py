@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from .index_build import spread_for_udf
+
 # ---- exact -------------------------------------------------------------
 
 def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -228,39 +230,6 @@ def minhash_udf(text: pd.Series) -> pd.Series:
     # shifted into signed-long range for Spark LongType
 
 
-def _spread_for_udf(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
-    """Spread a narrow input across the cores before an expensive
-    Python-side signature pass (r10, guide §2.6/§4): a small corpus
-    parquet arrives as ONE scan partition, which serialized the whole
-    minhash/simhash UDF onto a single core (measured 8.3 s of an
-    11 s entry at 50k docs).  Callers project to the needed columns
-    first, so the repartition shuffles only (id, text).
-
-    Two no-op guards keep this scale-adaptive rather than tuned to one
-    shape: inputs that already have scan parallelism are left alone
-    (no shuffle), and inputs below ``min_bytes`` (plan-statistics
-    estimate; env ``EASTSTORM_SPREAD_MIN_BYTES``, default 2 MB) keep
-    their single-partition plan — at a few thousand rows the
-    repartition's fixed shuffle/stage cost exceeds the single-core UDF
-    time it saves (measured 1.3-2.6× regressions at the 5k-doc scale
-    before the gate)."""
-    import os
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("EASTSTORM_SPREAD_MIN_BYTES", str(2 << 20)))
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = min_bytes  # unknown → assume large (spread)
-    if size < min_bytes:
-        return df
-    return df.repartition(par * 2)
-
-
 def minhash_candidates(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n_bands: int = N_BANDS, max_bucket_docs: int = 256,
@@ -290,7 +259,7 @@ def minhash_candidates(
     Pass ``metrics={}`` to learn whether capping engaged
     (``metrics["overcap_buckets"]`` — see :func:`star_capped_pairs`)."""
     rows_per_band = N_HASHES // n_bands
-    sigs = _spread_for_udf(
+    sigs = spread_for_udf(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     ).select("doc_id", minhash_udf(F.col("text")).alias("sig"))
     bands = sigs.select(
@@ -342,7 +311,7 @@ def simhash_buckets(docs: DataFrame, text_col: str = "text", id_col: str = "doc_
                     prefix_bits: int = 16) -> DataFrame:
     """Near-dup buckets by SimHash prefix (cheap blocking stage; the
     within-bucket hamming check runs on bounded groups)."""
-    sh = _spread_for_udf(
+    sh = spread_for_udf(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     ).select("doc_id", simhash_udf(F.col("text")).alias("simhash"))
     return (
@@ -388,7 +357,7 @@ def simhash_near_dups(
     k = max_hamming
     n_blocks = k + 1
     width = 64 // n_blocks
-    sh = _spread_for_udf(
+    sh = spread_for_udf(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     ).select("doc_id", simhash_udf(F.col("text")).alias("sh"))
     block_cols = []
@@ -458,7 +427,7 @@ def _gram_explode(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFr
             StructField("n_grams", IntegerType()),
         ]
     )
-    src = _spread_for_udf(
+    src = spread_for_udf(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     )
 

@@ -147,6 +147,38 @@ def ensure_parallelism(df: DataFrame, min_factor: int = 2) -> DataFrame:
     return df
 
 
+# below this plan-statistics size estimate spread_for_udf keeps the
+# single-partition plan (measured r10: 1.3-2.6x regressions at the
+# 5k-doc scale before the gate)
+SPREAD_MIN_BYTES = 2 << 20
+
+
+def spread_for_udf(df: DataFrame) -> DataFrame:
+    """Spread a narrow input across the cores before an expensive
+    per-row Python or scoring pass (r10, guide §2.6/§4): a small
+    parquet input arrives as ONE scan partition, which serialized the
+    whole minhash/simhash UDF (8.3 s of an 11 s entry at 50k docs) or
+    the cosine/IVF assignment onto a single core.  Callers project to
+    the needed columns first, so the repartition shuffles only those.
+
+    Two no-op guards keep this scale-adaptive rather than tuned to one
+    shape: inputs that already have scan parallelism are left alone
+    (no shuffle), and inputs below ``SPREAD_MIN_BYTES`` keep their
+    single-partition plan — at a few thousand rows the repartition's
+    fixed shuffle/stage cost exceeds the single-core time it saves."""
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= par:
+        return df
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        size = SPREAD_MIN_BYTES  # unknown → assume large (spread)
+    if size < SPREAD_MIN_BYTES:
+        return df
+    return df.repartition(par * 2)
+
+
 class IndexPaths:
     def __init__(self, root: str):
         self.root = root

@@ -75,91 +75,66 @@ class _TermPostings:
         self.block_ubs = ubs
         self.global_ub = float(ubs.max()) if len(blocks) else 0.0
         self._decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._all = np.arange(len(self.n))
         # per-query request tags: blocks_logical counts each block at
         # most once per (query, term) even when a query touches it via
-        # both all_docs and contributions (essential terms do) — the
+        # both full() and contributions() (essential terms do) — the
         # cold-cache-per-query semantics the metric claims
         self._req_tag = np.full(len(blocks), -1, dtype=np.int64)
         self._qtag = 0
 
-    def begin_query(self) -> None:
+    def begin_query(self, counters: dict | None) -> None:
         """Mark a new query against this (possibly shared) handle —
-        resets the per-query logical-decode accounting."""
+        resets the per-query logical-decode accounting and adds the
+        term's blocks to ``blocks_total``.  The one per-query prologue:
+        ``bm25.score_chunk`` calls it before every executor call."""
         self._qtag += 1
-
-    def _count_logical(self, counters: dict, idxs: np.ndarray) -> None:
-        new_mask = self._req_tag[idxs] != self._qtag
-        counters["blocks_logical"] = (
-            counters.get("blocks_logical", 0) + int(new_mask.sum())
-        )
-        self._req_tag[idxs[new_mask]] = self._qtag
-
-    def _decode_blocks(self, idxs: np.ndarray) -> None:
-        new = [int(i) for i in idxs if int(i) not in self._decoded]
-        if not new:
-            return
-        d = codec.delta_decode_concat(
-            [self.docs_b[i] for i in new], self.n[new]
-        ).astype(np.int64)
-        tf = codec.vb_decode_concat([self.tfs_b[i] for i in new]).astype(np.float64)
-        dl = codec.vb_decode_concat([self.dls_b[i] for i in new]).astype(np.float64)
-        tfn = (tf * (sqltok.K1 + 1.0)) / (
-            tf + sqltok.K1 * (1.0 - sqltok.B + sqltok.B * dl / self.avgdl)
-        )
-        off = 0
-        for i in new:
-            c = int(self.n[i])
-            self._decoded[i] = (d[off:off + c], tfn[off:off + c])
-            off += c
-
-    def all_docs(self, counters: dict | None) -> np.ndarray:
-        """Every posting doc id (ascending) — the term is essential."""
-        idxs = np.arange(len(self.n))
         if counters is not None:
-            fresh = sum(1 for i in idxs if int(i) not in self._decoded)
-            counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + fresh
-            # logical = what a cold cache would decode for THIS query —
-            # keeps the skip-rate metric comparable across batch sizes
-            # (fresh alone conflates cross-query cache sharing with
-            # algorithmic block skipping, ADVICE r07); tag-deduped so a
-            # block requested via both all_docs and contributions in
-            # one query counts once
-            self._count_logical(counters, idxs)
-        self._decode_blocks(idxs)
-        if not len(self.n):
-            return np.empty(0, dtype=np.int64)
-        return np.concatenate([self._decoded[int(i)][0] for i in idxs])
+            counters["blocks_total"] = counters.get("blocks_total", 0) + len(self.n)
+
+    def _take(
+        self, idxs: np.ndarray, counters: dict | None
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(docs, tfn) concatenated over the ascending block indices
+        ``idxs``, decoding only blocks not cached yet.  ``counters``
+        records fresh decodes (``blocks_decoded``) and what a cold
+        cache would decode for THIS query (``blocks_logical``, tag-
+        deduped per query) — the skip-rate numerator comparable across
+        batch sizes (ADVICE r07).  Values are bitwise-stable regardless
+        of which earlier call decoded which blocks (tfn is elementwise)."""
+        ids = idxs.tolist()
+        new = [i for i in ids if i not in self._decoded]
+        if counters is not None:
+            counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + len(new)
+            first = self._req_tag[idxs] != self._qtag
+            counters["blocks_logical"] = (
+                counters.get("blocks_logical", 0) + int(first.sum())
+            )
+            self._req_tag[idxs[first]] = self._qtag
+        if new:
+            d = codec.delta_decode_concat(
+                [self.docs_b[i] for i in new], self.n[new]
+            ).astype(np.int64)
+            tf = codec.vb_decode_concat([self.tfs_b[i] for i in new]).astype(np.float64)
+            dl = codec.vb_decode_concat([self.dls_b[i] for i in new]).astype(np.float64)
+            tfn = (tf * (sqltok.K1 + 1.0)) / (
+                tf + sqltok.K1 * (1.0 - sqltok.B + sqltok.B * dl / self.avgdl)
+            )
+            off = 0
+            for i in new:
+                c = int(self.n[i])
+                self._decoded[i] = (d[off:off + c], tfn[off:off + c])
+                off += c
+        if not ids:
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+        return (
+            np.concatenate([self._decoded[i][0] for i in ids]),
+            np.concatenate([self._decoded[i][1] for i in ids]),
+        )
 
     def full(self, counters: dict | None) -> tuple[np.ndarray, np.ndarray]:
-        """(docs, tfn) over every posting — the exhaustive executor's
-        shape.  Values are bitwise-stable regardless of which earlier
-        call decoded which blocks (tfn is elementwise)."""
-        idxs = np.arange(len(self.n))
-        if counters is not None:
-            fresh = sum(1 for i in idxs if int(i) not in self._decoded)
-            counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + fresh
-            self._count_logical(counters, idxs)
-        self._decode_blocks(idxs)
-        if not len(self.n):
-            e = np.empty(0)
-            return e.astype(np.int64), e
-        return (
-            np.concatenate([self._decoded[int(i)][0] for i in idxs]),
-            np.concatenate([self._decoded[int(i)][1] for i in idxs]),
-        )
-
-    def docs_for_blocks(self, idxs: np.ndarray, counters: dict | None) -> np.ndarray:
-        """Doc ids (ascending) of the given block indices, decoding
-        only those blocks — the interval-WAND candidate source (r10).
-        ``idxs`` must be ascending (np.unique output)."""
-        if idxs.size == 0:
-            return np.empty(0, dtype=np.int64)
-        if counters is not None:
-            fresh = sum(1 for i in idxs if int(i) not in self._decoded)
-            counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + fresh
-            self._count_logical(counters, idxs)
-        self._decode_blocks(idxs)
-        return np.concatenate([self._decoded[int(i)][0] for i in idxs])
+        """(docs, tfn) over every posting, docs ascending."""
+        return self._take(self._all, counters)
 
     def contributions(
         self, cand: np.ndarray, counters: dict | None
@@ -173,42 +148,19 @@ class _TermPostings:
         idxs = np.flatnonzero(hit)
         if idxs.size == 0:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-        if counters is not None:
-            fresh = sum(1 for i in idxs if int(i) not in self._decoded)
-            counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + fresh
-            self._count_logical(counters, idxs)
-        self._decode_blocks(idxs)
-        d = np.concatenate([self._decoded[int(i)][0] for i in idxs])
-        tfn = np.concatenate([self._decoded[int(i)][1] for i in idxs])
+        d, tfn = self._take(idxs, counters)
         pos = np.searchsorted(cand, d)
         m = (pos < cand.size) & (cand[np.minimum(pos, cand.size - 1)] == d)
         return pos[m], self.idf * tfn[m]
 
 
 def maxscore_topk(
-    term_blocks: list[pd.DataFrame],
-    idfs: list[float],
-    k: int,
-    avgdl: float,
-    counters: dict | None = None,
+    terms: list[_TermPostings], k: int, counters: dict | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
     """Block-max MaxScore over one doc-range chunk → (docs, scores)
     sorted by (score desc, doc asc), at most k entries; bitwise equal
     to ``_exhaustive_topk`` / ``wand_topk`` (equality pytest-gated).
-    ``counters`` accumulates ``blocks_total`` / ``blocks_decoded``."""
-    # callers batching many queries over one chunk pass shared
-    # _TermPostings instances so a term's blocks decode once per CHUNK,
-    # not once per query (bm25.score_chunk); bare frames also accepted
-    terms = [
-        b if isinstance(b, _TermPostings) else _TermPostings(b, w, avgdl)
-        for b, w in zip(term_blocks, idfs)
-    ]
-    if counters is not None:
-        counters["blocks_total"] = counters.get("blocks_total", 0) + sum(
-            len(t.n) for t in terms
-        )
-        for t in terms:
-            t.begin_query()  # per-query logical-decode accounting
+    ``counters`` accumulates ``blocks_decoded`` / ``blocks_logical``."""
     by_ub = sorted(range(len(terms)), key=lambda i: -terms[i].global_ub)
     suffix_ub = np.zeros(len(terms) + 1)
     for pos in range(len(terms) - 1, -1, -1):
@@ -231,7 +183,7 @@ def maxscore_topk(
         # (≫ n_terms·ε ≈ 2e-15) before the strict '<'
         if top_docs.size >= k and suffix_ub[pos] * (1.0 + 1e-12) < theta:
             break
-        wave = terms[ti].all_docs(counters)
+        wave = terms[ti].full(counters)[0]
         if scored.size and wave.size:
             # both sorted + unique: sorted membership instead of
             # np.isin's internal re-sort

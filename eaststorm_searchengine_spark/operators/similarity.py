@@ -19,32 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
-    """Spread a narrow input across the cores before a per-row scoring
-    pass (r10, guide §2.6): a small embeddings parquet arrives as ONE
-    scan partition, which serialized the whole cosine/assignment work
-    onto a single core.  Callers project to the needed columns first;
-    inputs with real scan parallelism are untouched, and inputs below
-    ``min_bytes`` (plan-statistics estimate; env
-    ``EASTSTORM_SPREAD_MIN_BYTES``, default 2 MB) keep their
-    single-partition plan — the repartition's fixed cost exceeds the
-    single-core work it saves at a few thousand rows (measured)."""
-    import os
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("EASTSTORM_SPREAD_MIN_BYTES", str(2 << 20)))
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = min_bytes  # unknown → assume large (spread)
-    if size < min_bytes:
-        return df
-    return df.repartition(par * 2)
+from .index_build import spread_for_udf
 
 
 def _cosine(vec_col, qcol):
@@ -112,7 +87,7 @@ def cosine_topk(
     ``_rank_topk``'s NULL/NaN filter removed before."""
     Q = np.asarray([v for _, v in query_vectors], dtype=np.float64)
     qids = np.asarray([qid for qid, _ in query_vectors], dtype=np.int64)
-    src = _spread(
+    src = spread_for_udf(
         embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
     )
 
@@ -544,7 +519,7 @@ class IVFIndex:
         self.spark = embeddings.sparkSession
         norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda a, v: a + v * v))
         base = (
-            _spread(
+            spread_for_udf(
                 embeddings.select(
                     F.col(id_col).alias("vec_id"),
                     F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),

@@ -42,7 +42,6 @@ as maxscore.py).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from .maxscore import _TermPostings
 
@@ -54,28 +53,14 @@ POINT_TERM_MAX_BLOCKS = 2
 
 
 def wand_topk(
-    term_blocks: list[pd.DataFrame],
-    idfs: list[float],
-    k: int,
-    avgdl: float,
-    counters: dict | None = None,
+    terms: list[_TermPostings], k: int, counters: dict | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
     """Interval block-max WAND over one doc-range chunk → (docs,
     scores) sorted by (score desc, doc asc), at most k entries;
     bitwise equal to ``_exhaustive_topk`` / ``maxscore_topk`` (equality
     pytest-gated).  ``counters`` (optional dict) accumulates
-    ``blocks_total`` / ``blocks_decoded`` / ``blocks_logical`` — the
-    decode-avoidance evidence, zero cost when None."""
-    terms = [
-        b if isinstance(b, _TermPostings) else _TermPostings(b, w, avgdl)
-        for b, w in zip(term_blocks, idfs)
-    ]
-    if counters is not None:
-        counters["blocks_total"] = counters.get("blocks_total", 0) + sum(
-            len(t.n) for t in terms
-        )
-        for t in terms:
-            t.begin_query()  # per-query logical-decode accounting
+    ``blocks_decoded`` / ``blocks_logical`` — the decode-avoidance
+    evidence, zero cost when None."""
     terms = [t for t in terms if len(t.n)]
     empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
     if not terms:
@@ -92,12 +77,8 @@ def wand_topk(
     point: dict[int, tuple[np.ndarray, np.ndarray]] = {}  # ti → (docs, idf·tfn)
     for ti, t in enumerate(terms):
         if len(t.n) <= POINT_TERM_MAX_BLOCKS:
-            idxs = np.arange(len(t.n))
-            d = t.docs_for_blocks(idxs, counters)
-            contrib = t.idf * np.concatenate(
-                [t._decoded[int(i)][1] for i in idxs]
-            )
-            point[ti] = (d, contrib)
+            d, tfn = t.full(counters)
+            point[ti] = (d, t.idf * tfn)
 
     # fence intervals: within [starts[m], ends[m]) every span term's
     # live block (the one whose [first_doc, last_doc] covers the
@@ -162,7 +143,7 @@ def wand_topk(
             idxs = np.unique(bi[live])
             if idxs.size == 0:
                 continue
-            d = t.docs_for_blocks(idxs, counters)
+            d = t._take(idxs, counters)[0]
             pos = np.searchsorted(s_sel, d, side="right") - 1
             inside = (pos >= 0) & (d < e_sel[np.maximum(pos, 0)])
             cand_parts.append(d[inside])

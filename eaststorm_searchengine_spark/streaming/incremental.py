@@ -98,34 +98,14 @@ def refresh_metadata(spark: SparkSession, index_dir: str, n_buckets: int = ib.DE
     segment store (idempotent)."""
     import json
 
-    import numpy as np
-    import pandas as pd
-
-    from ..operators import codec
-
-    paths = ib.IndexPaths(index_dir)
-    seg = spark.read.parquet(paths.segments)
-    dl_rows = seg.filter(F.col("term") == ib.DOCLEN_TERM).select("docs", "dls")
-
-    def decode_dl(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples():
-                ids = codec.delta_decode(r.docs).astype(np.int64)
-                dls = codec.vb_decode(r.dls).astype(np.int64)
-                outs.append(pd.DataFrame({"doc_id": ids, "dl": dls}))
-            if outs:
-                yield pd.concat(outs)
-
     from pyspark.sql import Observation
 
+    from ..functions import sqltok
+    from ..sources import fsio
+
+    paths = ib.IndexPaths(index_dir)
     dl_obs = Observation()
-    dl_rows.mapInPandas(decode_dl, "doc_id long, dl long").observe(
-        dl_obs,
-        F.count("*").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-        F.sum("dl").alias("total_tokens"),
-    ).write.mode("overwrite").parquet(paths.doclens)
+    ib._write_doclens(spark.read.parquet(paths.segments), paths.doclens, dl_obs)
     agg = dl_obs.get  # corpus stats ride the write job (r8 floor cut)
     n_terms = ib._finalize(spark, paths)
     stats = {
@@ -136,11 +116,9 @@ def refresh_metadata(spark: SparkSession, index_dir: str, n_buckets: int = ib.DE
         "n_buckets": n_buckets,
         "block": ib.BLOCK,
         "layout": "fragment-streaming",
-        "k1": 1.2,
-        "b": 0.75,
+        "k1": sqltok.K1,
+        "b": sqltok.B,
     }
-    from ..sources import fsio
-
     fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
     return stats
 

@@ -27,7 +27,10 @@ from eaststorm_searchengine_spark.operators.index_build import (
     BLOCK,
     build_index_fast,
 )
-from eaststorm_searchengine_spark.operators.maxscore import maxscore_topk
+from eaststorm_searchengine_spark.operators.maxscore import (
+    _TermPostings,
+    maxscore_topk,
+)
 from eaststorm_searchengine_spark.operators.wand import wand_topk
 
 SF = "/root/testdata/sf0.001"
@@ -120,6 +123,30 @@ def test_driver_merge_equals_window_rank(idx):
     assert e.count() == 0 and e.columns == ["query_id", "rank", "doc_id", "score"]
 
 
+@pytest.mark.parametrize("method", ["auto", "exhaustive", "maxscore", "wand"])
+def test_bad_arguments_raise(idx, method):
+    """k < 1, an unknown method and an unknown final_rank raise
+    ValueError on every entry point.  Unchecked, k=0 crashed the
+    maxscore/wand executors on an empty top-k, k=-1 returned a
+    per-executor number of rows, and an unknown method or final_rank
+    silently ran the exhaustive executor or the window rank."""
+    q = [(1, "hash join")]
+    for k in (0, -1):
+        for final_rank in ("window", "driver"):
+            with pytest.raises(ValueError, match="k must be"):
+                idx.search(q, k=k, method=method, final_rank=final_rank)
+        with pytest.raises(ValueError, match="k must be"):
+            idx.phrase_search(q, k=k)
+        with pytest.raises(ValueError, match="k must be"):
+            idx.explain(q, k=k)
+    with pytest.raises(ValueError, match="unknown method"):
+        idx.search(q, k=5, method=method.upper())
+    with pytest.raises(ValueError, match="unknown final_rank"):
+        idx.search(q, k=5, method=method, final_rank="Driver")
+    # the smallest valid k still serves
+    assert idx.search(q, k=1, method=method).count() == 1
+
+
 # ---- randomized WAND equivalence on synthetic posting lists -------------
 
 def _mk_blocks(postings, avgdl):
@@ -144,6 +171,15 @@ def _mk_blocks(postings, avgdl):
             }
         )
     return pd.DataFrame(rows)
+
+
+def _terms(frames, idfs, avgdl, counters=None):
+    """Block frames → fresh _TermPostings handles, after the per-query
+    prologue ``score_chunk`` runs before every executor call."""
+    terms = [_TermPostings(f, w, avgdl) for f, w in zip(frames, idfs)]
+    for t in terms:
+        t.begin_query(counters)
+    return terms
 
 
 @given(
@@ -171,9 +207,9 @@ def test_wand_equals_exhaustive_random(data, n_terms, k):
         idfs.append(data.draw(st.floats(min_value=0.01, max_value=8.0)))
     avgdl = sum(all_dls) / len(all_dls)
     frames = [_mk_blocks(p, avgdl) for p in term_blocks]
-    d1, s1 = _exhaustive_topk(frames, idfs, k, avgdl)
-    d2, s2 = wand_topk(frames, idfs, k, avgdl)
-    d3, s3 = maxscore_topk(frames, idfs, k, avgdl)
+    d1, s1 = _exhaustive_topk(_terms(frames, idfs, avgdl), k)
+    d2, s2 = wand_topk(_terms(frames, idfs, avgdl), k)
+    d3, s3 = maxscore_topk(_terms(frames, idfs, avgdl), k)
     assert d1.tolist() == d2.tolist() == d3.tolist()
     # bitwise-identical scores across all three executors
     assert s1.tolist() == s2.tolist() == s3.tolist()
@@ -268,8 +304,8 @@ def test_decode_counters_and_zipf_determinism(spark):
     blocks = pd.DataFrame(rows)
     rare = blocks.iloc[:1].copy()
     cw, ce = {}, {}
-    dw = wand.wand_topk([blocks, rare], [0.5, 6.0], 5, 100.0, counters=cw)
-    de = _exhaustive_topk([blocks, rare], [0.5, 6.0], 5, 100.0, counters=ce)
+    dw = wand.wand_topk(_terms([blocks, rare], [0.5, 6.0], 100.0, cw), 5, cw)
+    de = _exhaustive_topk(_terms([blocks, rare], [0.5, 6.0], 100.0, ce), 5, ce)
     assert ce["blocks_decoded"] == ce["blocks_total"] == len(blocks) + 1
     assert cw["blocks_total"] == len(blocks) + 1
     assert 0 < cw["blocks_decoded"] <= cw["blocks_total"]
@@ -309,39 +345,14 @@ def test_maxscore_skips_nonessential_blocks():
     dense = pd.DataFrame(rows)
     rare = dense.iloc[:1].copy()  # 128 postings clustered in one range
     cm, ce = {}, {}
-    dm = maxscore_topk([dense, rare], [0.3, 7.0], 10, 100.0, counters=cm)
-    de = _exhaustive_topk([dense, rare], [0.3, 7.0], 10, 100.0, counters=ce)
+    dm = maxscore_topk(_terms([dense, rare], [0.3, 7.0], 100.0, cm), 10, cm)
+    de = _exhaustive_topk(_terms([dense, rare], [0.3, 7.0], 100.0, ce), 10, ce)
     assert dm[0].tolist() == de[0].tolist()
     assert dm[1].tolist() == de[1].tolist()  # bitwise scores
     assert ce["blocks_decoded"] == ce["blocks_total"]
     assert cm["blocks_total"] == ce["blocks_total"]
     # candidates live in one doc range -> nearly all dense blocks skipped
     assert cm["blocks_decoded"] < cm["blocks_total"] // 4
-
-
-def test_choose_wand_chunk_local_anchor_rule():
-    """r5 cost model: WAND needs (a) ≥2 terms, (b) a globally selective
-    term, and (c) that term able to anchor the chunk's top-k (chunk-
-    local postings ≥ k) — below k, θ collapses to common-only scores
-    and nothing is skippable (measured)."""
-    import pandas as pd
-
-    from eaststorm_searchengine_spark.operators.bm25 import _choose_wand
-
-    def blocks(df, ns):
-        return pd.DataFrame({"df": [df] * len(ns), "n": ns})
-
-    dense = blocks(90_000, [128] * 50)
-    anchor_ok = blocks(200, [15])
-    anchor_thin = blocks(200, [3])
-    n_docs = 100_000
-    assert _choose_wand({"a": dense, "b": anchor_ok}, 10, n_docs)
-    # rarest term too thin in this chunk -> exhaustive
-    assert not _choose_wand({"a": dense, "b": anchor_thin}, 10, n_docs)
-    # no selective term anywhere -> exhaustive
-    assert not _choose_wand({"a": dense, "b": blocks(50_000, [128] * 30)}, 10, n_docs)
-    # single term -> exhaustive
-    assert not _choose_wand({"a": anchor_ok}, 10, n_docs)
 
 
 def test_wand_decision_reasons():
@@ -371,8 +382,12 @@ def test_wand_decision_reasons():
             "b": blocks(80_000, [128] * 600),
         },
     }
+    def decide(tcb):
+        dfs = {t: int(g["df"].iloc[0]) for t, g in tcb.items()}
+        return _wand_decision(tcb, 10, n_docs, dfs)
+
     for want, tcb in cases.items():
-        assert _wand_decision(tcb, 10, n_docs) == want
+        assert decide(tcb) == want
     assert set(cases) == set(DECISION_REASONS)
     # ADVICE r8: the threshold is term-count-aware — a 5-term dense
     # query at ~48k mean runs (measured regression region for wide
@@ -380,14 +395,10 @@ def test_wand_decision_reasons():
     # maxscore; 5 terms crossing 2^16 route too.
     run48k = blocks(90_000, [128] * 375)  # 48,000 postings per term
     wide48k = {t: run48k for t in "abcde"}
-    assert _wand_decision(wide48k, 10, n_docs) == "no_selective"
-    assert _wand_decision({"a": run48k, "b": run48k}, 10, n_docs) == (
-        "dense_long_run"
-    )
+    assert decide(wide48k) == "no_selective"
+    assert decide({"a": run48k, "b": run48k}) == "dense_long_run"
     run72k = blocks(90_000, [128] * 563)  # 72,064 > 2^16
-    assert _wand_decision({t: run72k for t in "abcde"}, 10, n_docs) == (
-        "dense_long_run"
-    )
+    assert decide({t: run72k for t in "abcde"}) == "dense_long_run"
 
 
 def test_decision_accumulators_report_auto_choices(spark, tmp_path):
@@ -486,12 +497,6 @@ def test_logical_decode_counter_per_query_semantics():
     import pandas as pd
 
     from eaststorm_searchengine_spark.operators import codec
-    from eaststorm_searchengine_spark.operators.bm25 import _exhaustive_topk
-    from eaststorm_searchengine_spark.operators.maxscore import (
-        _TermPostings,
-        maxscore_topk,
-    )
-
     def blocks_for(docs):
         rows = []
         for s in range(0, len(docs), 128):
@@ -508,10 +513,15 @@ def test_logical_decode_counter_per_query_semantics():
     a = _TermPostings(blocks_for(list(range(0, 2560, 2))), 2.0, 100.0)  # 10 blocks
     b = _TermPostings(blocks_for(list(range(0, 640, 1))), 5.0, 100.0)   # 5 blocks
 
+    def query(fn, counters):
+        for t in (a, b):
+            t.begin_query(counters)
+        fn([a, b], 10, counters)
+
     c = {}
-    _exhaustive_topk([a, b], [2.0, 5.0], 10, 100.0, counters=c)
+    query(_exhaustive_topk, c)
     q1 = dict(c)
-    _exhaustive_topk([a, b], [2.0, 5.0], 10, 100.0, counters=c)
+    query(_exhaustive_topk, c)
     assert q1["blocks_logical"] == 15  # every block, first query
     # second query on WARM shared handles: logical counts again (cold-
     # cache semantics), fresh does not (cache hit)
@@ -519,7 +529,7 @@ def test_logical_decode_counter_per_query_semantics():
     assert c["blocks_decoded"] - q1["blocks_decoded"] == 0
 
     c2 = {}
-    maxscore_topk([a, b], [2.0, 5.0], 10, 100.0, counters=c2)
+    query(maxscore_topk, c2)
     # essential terms touch blocks via all_docs AND contributions —
     # tag-dedup keeps logical ≤ total
     assert c2["blocks_logical"] <= c2["blocks_total"]
