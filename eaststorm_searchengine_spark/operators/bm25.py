@@ -25,6 +25,14 @@ the global top-k is a tiny shuffle of ``n_chunks × k`` candidate rows —
 the same TakeOrdered pattern Spark plans for orderBy+limit
 (SURVEY.md §2.5).  Replaces the reference's driver-side HashMap ranker
 (``jobs/SearchServer.java:103-226``).
+
+Small driver-merge queries run no Spark job at all: when the present
+terms' Σ df is at most ``LOCAL_SERVE_POSTINGS`` and the store is on a
+local filesystem, the driver reads the pruned block rows straight from
+the segment parquet with Arrow and runs the SAME per-chunk scorer and
+the SAME driver merge — the reference's point-read-and-rank-on-the-
+coordinator shape (``jobs/SearchServer.java:114-186``).  Larger
+queries, remote stores and the window rank stay distributed.
 """
 
 from __future__ import annotations
@@ -33,6 +41,7 @@ import json
 import math
 import os
 import threading
+from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
@@ -76,21 +85,24 @@ class BM25Index:
         long-lived query server: repeat batch queries scan the columnar
         cache instead of re-reading parquet.  Off by default (a pinned
         index holds cluster cache for the handle's lifetime; call
-        :meth:`unpersist` when done).  The single-query driver-merge
-        path deliberately ignores the pin: it scans parquet through the
-        one-job serving session, and an r8 A/B measured the cached
-        columnar scan of binary posting blobs no faster than parquet +
-        OS page cache (0.43-0.50 vs 0.36-0.48 s p50 @ 1M) while the
-        extra AQE session would cost a second job barrier."""
+        :meth:`unpersist` when done).  The driver-merge path
+        deliberately ignores the pin: a small query reads its blocks
+        from parquet on the driver with Arrow (no job), a large one
+        scans parquet through the one-job serving session — an r8 A/B
+        measured the cached columnar scan of binary posting blobs no
+        faster than parquet + OS page cache (0.43-0.50 vs 0.36-0.48 s
+        p50 @ 1M) while the extra AQE session would cost a second job
+        barrier."""
         self.spark = spark
         self.paths = IndexPaths(root)
         self.pin = pin
-        # guards the lazy one-time inits (serving session, df map) when
-        # one handle serves concurrent threads — a long-lived query
-        # server's natural shape (r9): without it two racing first
-        # queries each call spark.newSession(), leaking JVM
+        # guards the lazy one-time inits (serving session, Arrow
+        # dataset, df map) when one handle serves concurrent threads —
+        # a long-lived query server's natural shape (r9): without it two
+        # racing first queries each call spark.newSession(), leaking JVM
         # SessionState, or double-build the driver df map
         self._init_lock = threading.Lock()
+        self._serve_spark = None  # lazy non-AQE serving session
         self._load()
 
     def _load(self) -> None:
@@ -112,6 +124,7 @@ class BM25Index:
         self._df_map: dict | bool | None = None  # lazy driver-side df cache
         self._df_cache: dict = {}  # big-vocab per-term memo (reset on reload)
         self._serve_segs_df = None  # lazy non-AQE serving-session scan
+        self._local_ds = None  # lazy driver-side Arrow dataset
         if self.pin:
             self._segs_df = self._segs_df.persist(StorageLevel.MEMORY_AND_DISK)
             self._stats_df = self._stats_df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -175,7 +188,7 @@ class BM25Index:
             with self._init_lock:  # concurrent first queries: init once
                 if self._serve_segs_df is not None:
                     return self._serve_segs_df
-                s = getattr(self, "_serve_spark", None)
+                s = self._serve_spark
                 if s is None:
                     # ONE serving session per handle lifetime
                     # (code-review r8): sessions have no per-session
@@ -197,6 +210,30 @@ class BM25Index:
                         pass
                 self._serve_segs_df = s.read.parquet(self.paths.segments)
         return self._serve_segs_df
+
+    def _local_segs(
+        self, buckets: list[int], terms: list[str], cols: list[str]
+    ) -> pd.DataFrame:
+        """The pruned segment scan read on the driver, with no Spark job:
+        an Arrow dataset over the segment parquet (hive partitions, so
+        ``bucket`` prunes directories and ``stream_batch=`` fragment
+        stores read as they are), filtered to ``buckets`` and ``terms``.
+        The dataset holds the file listing; it is built lazily once per
+        handle and dropped by ``_load``, so the rebuild detection that
+        refreshes the Spark file index refreshes this one too."""
+        import pyarrow.dataset as pads
+
+        ds = self._local_ds
+        if ds is None:
+            with self._init_lock:  # concurrent first queries: list once
+                if self._local_ds is None:
+                    self._local_ds = pads.dataset(
+                        urlparse(self.paths.segments).path,
+                        format="parquet", partitioning="hive",
+                    )
+                ds = self._local_ds
+        flt = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
+        return ds.to_table(columns=cols, filter=flt).to_pandas()
 
     # Cap on loading the whole vocabulary's (term, df) driver-side: a
     # sandbox/1M-doc index's vocab is a few-MB dict (load once per
@@ -272,10 +309,14 @@ class BM25Index:
         keeps its token order, ``dedupe=False``) → driver-side df (r8:
         no per-query broadcast-join job) → the indexed terms → a
         bucket- and term-pruned scan of ``cols``.  Driver-merge queries
-        scan through the one-job serving session (no AQE barrier);
-        batch/window queries keep the AQE session.  Returns
-        ``(qterms, dfs, segs)``; ``segs`` is None when no query term is
-        indexed."""
+        whose present terms hold at most ``LOCAL_SERVE_POSTINGS``
+        postings on a local store read the scan on the driver
+        (``_local_segs``, no job); larger ones scan through the one-job
+        serving session (no AQE barrier); batch/window queries keep the
+        AQE session.  Returns ``(qterms, dfs, segs)``; ``segs`` is a
+        pandas frame on the local path, a Spark DataFrame otherwise,
+        and None when no query term is indexed.  Output rows are keyed
+        by query id, so a repeated id raises ``ValueError``."""
         if k < 1:
             raise ValueError(f"k must be >= 1, got {k}")
         if method not in METHODS:
@@ -287,6 +328,8 @@ class BM25Index:
         self._refresh_if_rebuilt()
         qterms = {}
         for qid, q in queries:
+            if qid in qterms:
+                raise ValueError(f"duplicate query id {qid!r}")
             toks = self._analyze(q)
             qterms[qid] = sorted(set(toks)) if dedupe else toks
         all_terms = sorted({t for ts in qterms.values() for t in ts})
@@ -295,6 +338,12 @@ class BM25Index:
         if not present:
             return qterms, dfs, None
         buckets = sorted({term_bucket(t, self.n_buckets) for t in present})
+        if (
+            final_rank == "driver"
+            and urlparse(self.paths.root).scheme in ("", "file")
+            and _serve_locally(sum(dfs[t] for t in present), LOCAL_SERVE_POSTINGS)
+        ):
+            return qterms, dfs, self._local_segs(buckets, present, cols)
         src = self._serve_segs() if final_rank == "driver" else self._segs_df
         segs = (
             src.filter(F.col("bucket").isin(buckets))  # partition pruning
@@ -348,9 +397,13 @@ class BM25Index:
         per-query window — fully distributed, the right shape when the
         batch is large.  ``"driver"`` merges the candidates driver-side
         (VERDICT r02 #7) — the same TakeOrdered pattern Spark plans for
-        orderBy+limit — collapsing the query to ONE job; identical
-        results (pytest-gated), ~2× lower single-query latency since
-        the second job's scheduling round-trip disappears.
+        orderBy+limit.  Below ``LOCAL_SERVE_POSTINGS`` (Σ df of the
+        present terms, local store) the whole query runs on the driver
+        with NO Spark job: Arrow reads the pruned block rows and the
+        same ``score_chunk`` scores each chunk group; above it the query
+        is ONE job (pruned scan → per-chunk scorer → collect).  Both
+        sides and the window rank return identical rows (pytest-gated
+        at the threshold).
 
         ``decode_acc``: optional (decoded, total[, logical]) Spark
         accumulators fed from the executors — block-decode evidence.
@@ -367,10 +420,8 @@ class BM25Index:
              "max_tf", "min_dl", "docs", "tfs", "dls"],
             method, final_rank,
         )
-        out_schema = "query_id int, doc_id long, score double"
-        if segs is None:
-            empty = self.spark.createDataFrame([], out_schema)
-            return self._rank(empty, k, score_round, final_rank)
+        if segs is None:  # no query term is indexed: empty, no job
+            return self._merge_on_driver([], k, score_round)
         avgdl, n_docs = self.avgdl, self.n_docs
 
         def score_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -448,16 +499,25 @@ class BM25Index:
                     decision_acc[reason].add(cnt)
             return pd.DataFrame(out_rows, columns=["query_id", "doc_id", "score"])
 
-        # NOTE (r9, VERDICT r08 #3 closure): a single-task variant
-        # (coalesce(1) + mapInPandas folding the pruned scan — no chunk
-        # shuffle, one stage) was built, equality-gated, and A/B'd at
-        # the 50k and 1M indexes: it LOST or tied at every shape (1M
-        # p50 0.84-1.19 s vs 0.58-0.72 distributed; even the most
-        # selective single term, df 5.8k, was a wash).  local[32] task
-        # scheduling is NOT the serving floor — the 32-way parallel
-        # scan+decode is load-bearing — so the two-stage distributed
-        # plan below is the measured optimum, not an overhead to cut.
-        candidates = segs.groupBy("chunk").applyInPandas(score_chunk, out_schema)
+        if isinstance(segs, pd.DataFrame):
+            # jobless driver path: the same scorer over the same chunk
+            # groups, the accumulators added on the driver
+            rows = [
+                r
+                for _, g in segs.groupby("chunk")
+                for r in score_chunk(g).itertuples(index=False, name=None)
+            ]
+            return self._merge_on_driver(rows, k, score_round)
+        # NOTE: for a driver-merge query this plan is one Spark job,
+        # whose scheduling, Python workers and Arrow boundary cost
+        # ~0.45 s however small the query, so queries under
+        # LOCAL_SERVE_POSTINGS run on the driver (break-even table
+        # there).  A single-task variant of this plan (r9: coalesce(1)
+        # + mapInPandas) lost or tied at every shape: the parallel
+        # scan+decode is what the job buys.
+        candidates = segs.groupBy("chunk").applyInPandas(
+            score_chunk, "query_id int, doc_id long, score double"
+        )
         return self._rank(candidates, k, score_round, final_rank)
 
     def explain(self, queries: list[tuple[int, str]], k: int = 10) -> DataFrame:
@@ -470,7 +530,8 @@ class BM25Index:
         block metadata (term, chunk, n) plus the driver-side df map
         ``search`` uses — posting blobs are never touched, so the cost
         is the pruned metadata scan, bounded by the query terms' block
-        counts.
+        counts; under the ``LOCAL_SERVE_POSTINGS`` rule that scan runs
+        on the driver with no Spark job.
 
         Returns DataFrame(query_id, chunk, decision, n_terms_present,
         rarest_term, rarest_df, rarest_chunk_postings) where
@@ -479,15 +540,19 @@ class BM25Index:
         the MaxScore executor since r7 — or the rejection reason) and
         ``rarest_chunk_postings`` is the chunk-local Σn of the rarest
         term — the quantity the anchor rule tests against ``k``."""
-        qterms, dfs, segs = self._resolve(queries, k, ["term", "chunk", "n"])
+        qterms, dfs, segs = self._resolve(
+            queries, k, ["term", "chunk", "n"], final_rank="driver"
+        )
         schema = (
             "query_id int, chunk int, decision string, n_terms_present int, "
             "rarest_term string, rarest_df long, rarest_chunk_postings long"
         )
         if segs is None:
-            return self.spark.createDataFrame([], schema)
+            return _empty_frame(self.spark, schema)
         rows = []
-        for chunk, cg in segs.toPandas().groupby("chunk"):
+        if not isinstance(segs, pd.DataFrame):
+            segs = segs.toPandas()
+        for chunk, cg in segs.groupby("chunk"):
             by_term = {t: g for t, g in cg.groupby("term")}
             for qid, terms in qterms.items():
                 present = {t: by_term[t] for t in terms if t in by_term}
@@ -501,7 +566,12 @@ class BM25Index:
                         dfs[rarest], int(present[rarest]["n"].sum()),
                     )
                 )
-        return self.spark.createDataFrame(rows, schema)
+        if not rows:
+            return _empty_frame(self.spark, schema)
+        # a frame over pandas goes through Arrow into a LocalRelation:
+        # collect() runs no job (a list of tuples would parallelize)
+        names = [c.split()[0] for c in schema.split(",")]
+        return self.spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
 
     def phrase_search(
         self,
@@ -597,49 +667,7 @@ class BM25Index:
         final_rank: str = "window",
     ) -> DataFrame:
         if final_rank == "driver":
-            # TakeOrdered-style driver merge: each chunk already emitted
-            # its local top-k, so at most n_chunks × k rows per query
-            # arrive here — bounded regardless of corpus size.  Rounding
-            # happens in Python too (exact F.round HALF_UP parity via
-            # Decimal on the shortest double repr — same as Spark's
-            # BigDecimal.valueOf path), so the caller's collect() on the
-            # returned frame is a local parallelize with NO further
-            # shuffle/python stages: the whole query is one Spark job.
-            rows = candidates.collect()
-            rows.sort(key=lambda r: (r["query_id"], -r["score"], r["doc_id"]))
-            out, last_q, rk = [], None, 0
-            for r in rows:
-                if r["query_id"] != last_q:
-                    last_q, rk = r["query_id"], 0
-                rk += 1
-                if rk <= k:
-                    s = float(r["score"])
-                    if score_round is not None:
-                        s = _round_half_up(s, score_round)
-                    out.append((r["query_id"], rk, int(r["doc_id"]), s))
-            if not out:
-                return self.spark.createDataFrame(
-                    [], "query_id int, rank long, doc_id long, score double"
-                )
-            # the VALUES text below renders scores via repr(): NaN/inf
-            # would neither parse as SQL nor sort correctly above —
-            # unreachable with BM25 math, but fail loudly if a future
-            # scorer produces one (ADVICE r03 #5)
-            assert all(math.isfinite(s) for _, _, _, s in out), (
-                "non-finite score in driver-side rank merge"
-            )
-            # inline VALUES → Catalyst LocalRelation: the caller's
-            # collect() is served from the driver, NO job — a
-            # parallelize here would fan the ≤ queries×k rows into
-            # defaultParallelism near-empty tasks and task scheduling
-            # would dwarf the data
-            vals = ", ".join(
-                f"({q}, {r}L, {d}L, CAST({s!r} AS DOUBLE))" for q, r, d, s in out
-            )
-            return self.spark.sql(
-                "SELECT col1 AS query_id, col2 AS rank, col3 AS doc_id, "
-                f"col4 AS score FROM VALUES {vals}"
-            )
+            return self._merge_on_driver(candidates.collect(), k, score_round)
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
@@ -652,6 +680,58 @@ class BM25Index:
         if score_round is not None:
             ranked = ranked.withColumn("score", F.round("score", score_round))
         return ranked
+
+    def _merge_on_driver(
+        self, rows: list[tuple], k: int, score_round: int | None
+    ) -> DataFrame:
+        """TakeOrdered-style driver merge of ``(query_id, doc_id,
+        score)`` candidate rows: each chunk already emitted its local
+        top-k, so at most n_chunks × k rows per query arrive here —
+        bounded regardless of corpus size.  Rounding happens in Python
+        too (exact F.round HALF_UP parity via Decimal on the shortest
+        double repr — same as Spark's BigDecimal.valueOf path), so the
+        caller's collect() on the returned frame runs NO job."""
+        rows.sort(key=lambda r: (r[0], -r[2], r[1]))
+        out, last_q, rk = [], None, 0
+        for q, d, s in rows:
+            if q != last_q:
+                last_q, rk = q, 0
+            rk += 1
+            if rk <= k:
+                s = float(s)
+                if score_round is not None:
+                    s = _round_half_up(s, score_round)
+                out.append((int(q), rk, int(d), s))
+        if not out:
+            return _empty_frame(
+                self.spark, "query_id int, rank long, doc_id long, score double"
+            )
+        # the VALUES text below renders scores via repr(): NaN/inf
+        # would neither parse as SQL nor sort correctly above —
+        # unreachable with BM25 math, but fail loudly if a future
+        # scorer produces one (ADVICE r03 #5)
+        assert all(math.isfinite(s) for _, _, _, s in out), (
+            "non-finite score in driver-side rank merge"
+        )
+        # inline VALUES → Catalyst LocalRelation: the caller's
+        # collect() is served from the driver, NO job — a
+        # parallelize here would fan the ≤ queries×k rows into
+        # defaultParallelism near-empty tasks and task scheduling
+        # would dwarf the data
+        vals = ", ".join(
+            f"({q}, {r}L, {d}L, CAST({s!r} AS DOUBLE))" for q, r, d, s in out
+        )
+        return self.spark.sql(
+            "SELECT col1 AS query_id, col2 AS rank, col3 AS doc_id, "
+            f"col4 AS score FROM VALUES {vals}"
+        )
+
+
+def _empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty frame of ``schema`` whose collect() runs no job: the
+    optimizer folds ``limit(0)`` into an empty LocalRelation, while a
+    bare ``createDataFrame([])`` is an RDD scan."""
+    return spark.createDataFrame([], schema).limit(0)
 
 
 # the five outcomes of the auto cost model, in accumulator-report order
@@ -715,6 +795,36 @@ def _wand_decision(term_chunk_blocks: dict, k: int, n_docs: int, dfs: dict) -> s
     if int(term_chunk_blocks[rarest]["n"].sum()) < k:
         return "anchor_thin"
     return "wand"
+
+
+# Jobless serving gate: a driver-merge query whose present terms hold
+# at most this many postings (Σ df, known on the driver from the df
+# map) reads its blocks with Arrow and scores them on the driver
+# instead of launching a Spark job.  A job costs ~0.45 s of scheduling,
+# Python-worker and Arrow-boundary overhead however small the query;
+# the driver path's cost grows with the postings it decodes on one
+# core.  Break-even on a 4-core VM, p50 local vs one job, rows bitwise
+# equal for all four methods:
+#   3k-doc pages / 6k-doc zipf, small Σ df     36 / 39 ms vs 464 / 470 ms
+#   200k-doc zipf, Σ df 165k / 600k           82 / 265 ms vs 533 / 688 ms
+# and, on a 1M-doc zipf store, 4 interleaved pairs (median of 3 runs
+# per side; ranges over the pairs):
+#   Σ df 5.9k      38-65 ms vs  500-669 ms
+#   Σ df 114k      81-88 ms vs  488-560 ms
+#   Σ df 512k    251-265 ms vs  548-631 ms
+#   Σ df 1.00M   586-622 ms vs  777-881 ms   (one term; 2^20 = 1.05M)
+#   Σ df 1.70M   514-609 ms vs  778-925 ms
+#   Σ df 2.00M   744-790 ms vs  711-898 ms   (parity)
+#   Σ df 2.99M  969-1135 ms vs  896-1011 ms  (the job wins)
+# so 2^20 sits inside the local path's winning range, and heavier
+# queries keep the job's parallel scan+decode (wider on a cluster).
+LOCAL_SERVE_POSTINGS = 1 << 20
+
+
+def _serve_locally(postings: int, threshold: int) -> bool:
+    """The jobless-serving rule: ``postings`` (Σ df of the present
+    query terms) at most ``threshold``."""
+    return postings <= threshold
 
 
 def _exhaustive_topk(

@@ -44,8 +44,9 @@ def main() -> None:
                 f"(df={row['rarest_df']}, chunk_postings={row['rarest_chunk_postings']})"
             )
     # small CLI batches collect anyway → the driver-merge path serves
-    # them as ONE Spark job (non-AQE serving session, r8); identical
-    # results to the distributed window rank (pytest-gated)
+    # them on the driver with no Spark job (≤ LOCAL_SERVE_POSTINGS) or
+    # as ONE job (non-AQE serving session, r8); identical results to
+    # the distributed window rank (pytest-gated)
     rank_mode = "driver" if len(qs) <= 16 else "window"
     for row in idx.search(
         qs, k=args.k, method=args.method, score_round=4, final_rank=rank_mode

@@ -125,11 +125,12 @@ def test_driver_merge_equals_window_rank(idx):
 
 @pytest.mark.parametrize("method", ["auto", "exhaustive", "maxscore", "wand"])
 def test_bad_arguments_raise(idx, method):
-    """k < 1, an unknown method and an unknown final_rank raise
-    ValueError on every entry point.  Unchecked, k=0 crashed the
-    maxscore/wand executors on an empty top-k, k=-1 returned a
-    per-executor number of rows, and an unknown method or final_rank
-    silently ran the exhaustive executor or the window rank."""
+    """k < 1, an unknown method, an unknown final_rank and a repeated
+    query id raise ValueError on every entry point.  Unchecked, k=0
+    crashed the maxscore/wand executors on an empty top-k, k=-1
+    returned a per-executor number of rows, an unknown method or
+    final_rank silently ran the exhaustive executor or the window rank,
+    and a repeated query id silently served only its last query."""
     q = [(1, "hash join")]
     for k in (0, -1):
         for final_rank in ("window", "driver"):
@@ -143,8 +144,82 @@ def test_bad_arguments_raise(idx, method):
         idx.search(q, k=5, method=method.upper())
     with pytest.raises(ValueError, match="unknown final_rank"):
         idx.search(q, k=5, method=method, final_rank="Driver")
+    dup = [(1, "hash"), (2, "join"), (1, "merge")]
+    for final_rank in ("window", "driver"):
+        with pytest.raises(ValueError, match="duplicate query id 1"):
+            idx.search(dup, method=method, final_rank=final_rank)
+    with pytest.raises(ValueError, match="duplicate query id 1"):
+        idx.phrase_search(dup)
+    with pytest.raises(ValueError, match="duplicate query id 1"):
+        idx.explain(dup)
     # the smallest valid k still serves
     assert idx.search(q, k=1, method=method).count() == 1
+
+
+@pytest.fixture(scope="module")
+def frag_idx(spark):
+    """A ``stream_batch=`` fragment store: four micro-batches of
+    interleaved doc ids, so every chunk holds blocks of every batch."""
+    from pyspark.sql import functions as F
+
+    from eaststorm_searchengine_spark.streaming import incremental
+
+    root = f"{TMP}/t_bm25_frag_idx"
+    shutil.rmtree(root, ignore_errors=True)
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    for b in range(4):
+        incremental._append_batch(
+            docs.filter(F.col("doc_id") % 4 == b), b, root, "doc_id", "text", False, 8
+        )
+    incremental.refresh_metadata(spark, root, n_buckets=8)
+    return BM25Index(spark, root)
+
+
+@pytest.mark.parametrize("store", ["idx", "frag_idx"])
+def test_local_serving_gate_boundary(spark, request, monkeypatch, store):
+    """Both sides of the jobless-serving gate return identical rows:
+    with LOCAL_SERVE_POSTINGS at the batch's Σ df the driver reads and
+    scores the blocks itself, one posting below it the query runs as a
+    Spark job.  Rows are bitwise equal for every method, rounded or
+    not, and the decode/decision accumulator totals agree (added on the
+    driver on the local side, shipped from tasks on the other)."""
+    from eaststorm_searchengine_spark.operators import bm25
+
+    idx = request.getfixturevalue(store)
+    qs = [(1, "hash join"), (2, "merge sort join agg"), (3, "the a"),
+          (4, "zzznone"), (5, "data window stream")]
+    terms = sorted({t for _, q in qs for t in idx._analyze(q)})
+    sum_df = sum(idx._term_dfs(terms).values())
+    local_reads = []
+    real = BM25Index._local_segs
+    monkeypatch.setattr(
+        BM25Index, "_local_segs",
+        lambda self, *a: local_reads.append(a) or real(self, *a),
+    )
+    sc = spark.sparkContext
+
+    def run(threshold, method, score_round):
+        monkeypatch.setattr(bm25, "LOCAL_SERVE_POSTINGS", threshold)
+        dec = (sc.accumulator(0), sc.accumulator(0), sc.accumulator(0))
+        why = {r: sc.accumulator(0) for r in bm25.DECISION_REASONS}
+        n_reads = len(local_reads)
+        rows = [
+            tuple(r)
+            for r in idx.search(
+                qs, k=7, method=method, score_round=score_round,
+                final_rank="driver", decode_acc=dec, decision_acc=why,
+            ).collect()
+        ]
+        accs = ([a.value for a in dec], {r: a.value for r, a in why.items()})
+        return rows, accs, len(local_reads) > n_reads
+
+    for method in bm25.METHODS:
+        for score_round in (None, 4):
+            rows_d, accs_d, local_d = run(sum_df - 1, method, score_round)
+            rows_l, accs_l, local_l = run(sum_df, method, score_round)
+            assert not local_d and local_l
+            assert rows_l == rows_d and len(rows_l) > 0, (method, score_round)
+            assert accs_l == accs_d and accs_l[0][1] > 0, (method, accs_l, accs_d)
 
 
 # ---- randomized WAND equivalence on synthetic posting lists -------------
@@ -220,18 +295,23 @@ def test_idf_formula():
     assert bm25_idf(10, 1000) > bm25_idf(500, 1000)
 
 
-def test_live_handle_survives_index_rebuild(spark, tmp_path):
+@pytest.mark.parametrize("final_rank", ["window", "driver"])
+def test_live_handle_survives_index_rebuild(spark, tmp_path, final_rank):
     """ADVICE r03 #3: a BM25Index handle caches the segment DataFrames
-    at construction; rebuilding the index directory under a live
-    handle must not serve stale (or deleted-file) results.  The handle
-    stat-checks stats.json per search and refreshes itself."""
+    (and, on the driver-merge path, an Arrow dataset) on first use;
+    rebuilding the index directory under a live handle must not serve
+    stale (or deleted-file) results.  The handle stat-checks stats.json
+    per search and refreshes itself."""
     root = str(tmp_path / "idx_rebuild")
     docs_a = spark.createDataFrame(
         [(1, "alpha beta"), (2, "alpha gamma")], "doc_id long, text string"
     )
     build_index_fast(spark, docs_a, root)
     idx = BM25Index(spark, root)
-    got_a = {r.doc_id for r in idx.search([(1, "alpha")], k=10).collect()}
+    got_a = {
+        r.doc_id
+        for r in idx.search([(1, "alpha")], k=10, final_rank=final_rank).collect()
+    }
     assert got_a == {1, 2}
     # rebuild the SAME directory with a different corpus
     shutil.rmtree(root)
@@ -239,7 +319,10 @@ def test_live_handle_survives_index_rebuild(spark, tmp_path):
         [(7, "alpha delta"), (8, "epsilon zeta")], "doc_id long, text string"
     )
     build_index_fast(spark, docs_b, root)
-    got_b = {r.doc_id for r in idx.search([(1, "alpha")], k=10).collect()}
+    got_b = {
+        r.doc_id
+        for r in idx.search([(1, "alpha")], k=10, final_rank=final_rank).collect()
+    }
     assert got_b == {7}, f"stale handle: {got_b}"
 
 

@@ -209,49 +209,66 @@ def test_local_group_topk_equals_window_only_randomized(spark):
         assert rank(pruned) == rank(df), (seed, k)
 
 
-def test_single_query_driver_merge_is_one_job(spark, idx_root):
-    """r8 serving floor: a warm single-query search with
-    final_rank='driver' runs as exactly ONE Spark job — the per-query
-    broadcast-join job is gone (driver-side df resolution) and the AQE
-    map-stage materialization barrier is gone (dedicated non-AQE
-    serving session).  statusTracker-counted."""
+def _jobs_in_group(sc, group, fn) -> int:
+    """Spark jobs ``fn`` launches, counted under a dedicated job group
+    (ADVICE r8: counting default-group IDs context-wide races any
+    concurrent fixture/session job; the group is a thread-local
+    property so only THIS call's jobs land in it).  The status tracker
+    fills from the listener bus, so poll until the count holds still
+    instead of a fixed sleep."""
     import time
 
-    from eaststorm_searchengine_spark.operators.bm25 import BM25Index
-
-    idx = BM25Index(spark, idx_root)
-    # warm: df-map load + serving-session creation + scan caches
-    idx.search([(1, "hash join")], k=5, final_rank="driver").collect()
-    # Dedicated job group (ADVICE r8): counting default-group IDs
-    # context-wide races any concurrent fixture/session job; the group
-    # is a thread-local property so only THIS search's jobs land in it.
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    group = "test-single-query-one-job"
-    sc.setJobGroup(group, "1-job serving gate")
+    sc.setJobGroup(group, "serving job-count gate")
     try:
-        idx.search([(2, "merge sort")], k=5, final_rank="driver").collect()
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    # poll until the tracker is quiescent instead of a fixed sleep
-    jobs, deadline = [], time.time() + 10.0
-    while time.time() < deadline:
-        now = st.getJobIdsForGroup(group) or []
-        if jobs and list(now) == list(jobs):
-            break
-        jobs = list(now)
+    st = sc.statusTracker()
+    seen, steady, deadline = None, 0, time.time() + 10.0
+    while steady < 3 and time.time() < deadline:
+        now = list(st.getJobIdsForGroup(group) or [])
+        steady = steady + 1 if now == seen else 0
+        seen = now
         time.sleep(0.2)
-    assert len(jobs) == 1, f"expected 1 job, saw {len(jobs)}"
+    return len(seen)
 
 
-def test_concurrent_serving_no_crosstalk(spark, idx_root):
+def test_single_query_driver_merge_is_one_job(spark, idx_root, monkeypatch):
+    """Serving floor of a warm single query with final_rank='driver'.
+    Below LOCAL_SERVE_POSTINGS it runs NO Spark job: df from the
+    driver-side map, blocks read with Arrow, scored and merged on the
+    driver.  With the gate forced to 0 it is exactly ONE job (r8): the
+    per-query broadcast-join job is gone (driver-side df resolution)
+    and so is the AQE map-stage materialization barrier (dedicated
+    non-AQE serving session).  statusTracker-counted."""
+    from eaststorm_searchengine_spark.operators import bm25
+    from eaststorm_searchengine_spark.operators.bm25 import BM25Index
+
+    sc = spark.sparkContext
+    idx = BM25Index(spark, idx_root)
+
+    def query(q):
+        return lambda: idx.search([(2, q)], k=5, final_rank="driver").collect()
+
+    # warm: df-map load + Arrow dataset listing
+    query("hash join")()
+    assert _jobs_in_group(sc, "test-serving-local", query("merge sort")) == 0
+    monkeypatch.setattr(bm25, "LOCAL_SERVE_POSTINGS", 0)
+    # warm: serving-session creation + scan caches
+    query("hash join")()
+    assert _jobs_in_group(sc, "test-serving-one-job", query("merge sort")) == 1
+
+
+def test_concurrent_serving_no_crosstalk(spark, idx_root, monkeypatch):
     """VERDICT r08 #7: a long-lived query server drives ONE handle from
     many threads.  N concurrent ``search()`` calls (fresh handle, so
-    the lazy serving-session + df-map inits race too) must each return
-    exactly the sequential result for their own query — no cross-talk,
-    no double-created serving session."""
-    from pyspark import InheritableThread
+    the lazy Arrow-dataset / serving-session + df-map inits race too)
+    must each return exactly the sequential result for their own query
+    — no cross-talk, no double-listed Arrow dataset, no double-created
+    serving session.  Run on both sides of the jobless-serving gate."""
+    import pyarrow.dataset as pads
 
+    from eaststorm_searchengine_spark.operators import bm25
     from eaststorm_searchengine_spark.operators.bm25 import BM25Index
 
     queries = [
@@ -262,11 +279,37 @@ def test_concurrent_serving_no_crosstalk(spark, idx_root):
     want = {
         q: sorted(
             tuple(r)
-            for r in seq.search([(i, q)], k=5, score_round=4,
-                                final_rank="driver").collect()
+            for r in seq.search([(i, q)], k=5, score_round=4).collect()
         )
         for i, q in enumerate(queries)
     }
+    opened = []
+    real = pads.dataset
+    monkeypatch.setattr(
+        pads, "dataset", lambda *a, **kw: opened.append(a) or real(*a, **kw)
+    )
+    for threshold in (bm25.LOCAL_SERVE_POSTINGS, 0):
+        monkeypatch.setattr(bm25, "LOCAL_SERVE_POSTINGS", threshold)
+        opened.clear()
+        idx = _serve_concurrently(spark, idx_root, queries, want)
+        if threshold:
+            # every query read on the driver through ONE Arrow dataset
+            assert len(opened) == 1 and idx._local_ds is not None
+            assert idx._serve_spark is None
+        else:
+            # exactly one serving session despite the racing inits
+            assert not opened and idx._local_ds is None
+            assert idx._serve_spark is not None
+            assert idx._serve_segs_df is not None
+
+
+def _serve_concurrently(spark, idx_root, queries, want):
+    """Each query on its own thread, three times, against one fresh
+    handle; every result must equal ``want[query]``."""
+    from pyspark import InheritableThread
+
+    from eaststorm_searchengine_spark.operators.bm25 import BM25Index
+
     idx = BM25Index(spark, idx_root)  # fresh: lazy inits race below
     results, errors = {}, []
 
@@ -293,6 +336,4 @@ def test_concurrent_serving_no_crosstalk(spark, idx_root):
         t.join(timeout=120)
     assert not errors, errors
     assert set(results) == set(queries)
-    # exactly one serving session was created despite the racing inits
-    assert idx._serve_spark is not None
-    assert idx._serve_segs_df is not None
+    return idx

@@ -6,7 +6,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from eaststorm_searchengine_spark.operators.bm25 import BM25Index
+from eaststorm_searchengine_spark.operators.bm25 import FINAL_RANKS, BM25Index
 from eaststorm_searchengine_spark.operators.index_build import build_index_fast
 from eaststorm_searchengine_spark.streaming import incremental
 
@@ -163,11 +163,20 @@ def test_auto_compaction_policy(spark):
     assert incremental.fragment_stats(f"{root}/idx")["n_fragments"] == 8
 
     q = [(1, "join"), (2, "hash window"), (3, "the a")]
-    live = BM25Index(spark, f"{root}/idx")  # opened BEFORE compaction
-    want = sorted(
-        tuple(r) for r in live.search(q, k=10, score_round=4).collect()
-    )
-    assert len(want) > 0
+    # one live handle per rank path, opened and used BEFORE compaction:
+    # the driver-merge handle holds an Arrow dataset over the fragments
+    live = {fr: BM25Index(spark, f"{root}/idx") for fr in FINAL_RANKS}
+
+    def serve(handle, final_rank):
+        return sorted(
+            tuple(r)
+            for r in handle.search(
+                q, k=10, score_round=4, final_rank=final_rank
+            ).collect()
+        )
+
+    want = serve(live["window"], "window")
+    assert len(want) > 0 and serve(live["driver"], "driver") == want
 
     # past the threshold: compaction runs in place
     assert incremental.should_compact(fstats, max_fragments=4)
@@ -179,16 +188,9 @@ def test_auto_compaction_policy(spark):
     # file-count trigger fires independently of fragment count
     assert incremental.should_compact(after, max_fragments=4, max_files=0)
 
-    # a fresh handle AND the live pre-compaction handle (rebuild
-    # detection) both serve the exact pre-compaction results
-    got_fresh = sorted(
-        tuple(r)
-        for r in BM25Index(spark, f"{root}/idx")
-        .search(q, k=10, score_round=4)
-        .collect()
-    )
-    got_live = sorted(
-        tuple(r) for r in live.search(q, k=10, score_round=4).collect()
-    )
-    assert got_fresh == want
-    assert got_live == want
+    # a fresh handle AND the live pre-compaction handles (rebuild
+    # detection) serve the exact pre-compaction results on both rank
+    # paths — no stale or deleted fragment file is read
+    for fr, handle in live.items():
+        assert serve(BM25Index(spark, f"{root}/idx"), fr) == want
+        assert serve(handle, fr) == want, fr
